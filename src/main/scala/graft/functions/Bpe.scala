@@ -195,36 +195,11 @@ final class BpeTable(val merges: IndexedSeq[(String, String)])
         .map(UTF8String.fromString(_): Any))
 }
 
-/** The pre-r13 CodegenFallback string/Map encode loop, retained
-  * verbatim as the A/B + parity reference for [[BpeTable]]'s
-  * int-symbol fast path (MicroBench `bpe`; the fast==generic property
-  * spec covers the algorithmic equivalence). Not registered under any
-  * query-visible name. */
-private[graft] case class BpeEncodeLegacy(child: Expression,
-    merges: IndexedSeq[(String, String)] = Bpe.MergesIdx)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  @transient private lazy val rankOf: Map[(String, String), Int] =
-    merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_legacy"
-
-  override def nullSafeEval(input: Any): Any = {
-    val word = input.asInstanceOf[UTF8String].toString
-    new GenericArrayData(
-      Bpe.encodeWith(word, merges, rankOf).map(UTF8String.fromString(_): Any))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** `graft_bpe(word)` → array<string> of BPE tokens — one tight
   * int-symbol JVM loop per word through [[BpeTable]], codegen'd (was
   * CodegenFallback through the string/Map loop until r13; the BPE
-  * metering stage is q_curation_web's hot loop). The merges table is
+  * metering stage is q_curation_web's hot loop, 2.2× faster on it —
+  * OPTIMIZATION_r13.md, Wave 1). The merges table is
   * constructor closure state (the TopCells pattern), so a LEARNED
   * table rides with the plan — `BpeEncode(e)` keeps the default table
   * under the fixed `graft_bpe` name. */

@@ -16,8 +16,8 @@ object Portable {
     *
     * Spark side rides [[Md5Long60]] (r12): bit-identical to the
     * classic `conv(substring(md5(…),1,15),16,10)` chain but reads the
-    * 60 bits straight off the digest — 1.95× per call on a 10M-row
-    * microbench (tools/MicroBench; the chain pays three UTF8String
+    * 60 bits straight off the digest — 2.9× per call on 10M rows
+    * (OPTIMIZATION_r12.md, Wave 13; the chain pays three UTF8String
     * materializations plus conv's arbitrary-base parse, and md5-dense
     * operators make up to 13 calls per row). Falls back to the chain
     * when no session is active to register against (same bits either

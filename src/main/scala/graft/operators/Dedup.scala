@@ -922,41 +922,43 @@ FROM base CROSS JOIN ne CROSS JOIN tri"""
 
   def kCoreEdges(e0: DataFrame, k: Int = KCoreK,
       rounds: Int = KCoreRounds,
-      localEdgeBudget: Long = CcLocalEdgeBudget): DataFrame = {
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
     var e = e0.localCheckpoint()
+    // r13 driver replay (DriverReplay): the peel is pure set
+    // arithmetic — replayed wave-for-wave (same rounds cap, same
+    // no-edge-removed early exit) instead of 2 jobs + a checkpoint per
+    // wave. Above the budget the distributed peel runs unchanged.
+    DriverReplay.collectWithin(e.select(col("x"), col("y")).as[(Long, Long)],
+        localEdgeBudget) match {
+      case Some(es0) =>
+        var es = es0
+        var r = 0
+        var stable = false
+        while (r < rounds && !stable) {
+          val deg = new java.util.HashMap[Long, Long]()
+          es.foreach { case (x, y) =>
+            deg.merge(x, 1L, _ + _); deg.merge(y, 1L, _ + _)
+          }
+          val kept = es.filter { case (x, y) => deg.get(x) >= k && deg.get(y) >= k }
+          stable = kept.length == es.length
+          es = kept
+          r += 1
+        }
+        val core = new java.util.HashMap[Long, Long]()
+        es.foreach { case (x, y) =>
+          core.merge(x, 1L, _ + _); core.merge(y, 1L, _ + _)
+        }
+        val rows = core.keySet().toArray.map(_.asInstanceOf[Long]).sorted
+          .map(v => (v, core.get(v))).toSeq
+        return rows.toDF("v", "core_deg")
+      case None =>
+    }
     // early exit (r8 verdict): a wave that removes no edge is the
     // identity, and so is every later wave here and in the oracle's
     // fixed CTE chain — the peel depth, not the budget, bounds work
     var n = e.count()
-    // r13 size-adaptive local path (the connectedComponents posture):
-    // the peel is pure set arithmetic — replayed on the driver below
-    // the edge budget, wave-for-wave (same rounds cap, same
-    // no-edge-removed early exit), instead of 2 jobs + a checkpoint
-    // per wave. Above the budget the distributed peel runs unchanged.
-    if (n <= localEdgeBudget) {
-      val spark = e0.sparkSession
-      import spark.implicits._
-      var es = e.select(col("x"), col("y")).as[(Long, Long)].collect()
-      var r = 0
-      var stable = false
-      while (r < rounds && !stable) {
-        val deg = new java.util.HashMap[Long, Long]()
-        es.foreach { case (x, y) =>
-          deg.merge(x, 1L, _ + _); deg.merge(y, 1L, _ + _)
-        }
-        val kept = es.filter { case (x, y) => deg.get(x) >= k && deg.get(y) >= k }
-        stable = kept.length == es.length
-        es = kept
-        r += 1
-      }
-      val core = new java.util.HashMap[Long, Long]()
-      es.foreach { case (x, y) =>
-        core.merge(x, 1L, _ + _); core.merge(y, 1L, _ + _)
-      }
-      val rows = core.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        .map(v => (v, core.get(v))).toSeq
-      return rows.toDF("v", "core_deg")
-    }
     var r = 0
     var stable = false
     while (r < rounds && !stable) {
@@ -1004,41 +1006,41 @@ SELECT v AS doc_id, count(*) AS core_deg FROM (
   /** The PR recurrence over an explicit canonical (x, y) pair list —
     * split out for the local/distributed parity spec. */
   private[graft] def pageRankEdges(e: DataFrame,
-      localEdgeBudget: Long = CcLocalEdgeBudget): DataFrame = {
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
     val spark = e.sparkSession
+    import spark.implicits._
     // undirected: both directions; deg = out-degree in the directed view
     val edges = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
       .select(col("x").as("src"), col("y").as("dst")).localCheckpoint()
-    // r13: the same size-adaptive posture as connectedComponents — the
-    // recurrence is integer fixed-point BY DESIGN (portability), so a
-    // sub-budget edge frame replays on the driver operation-for-
-    // operation (Long `/` on non-negatives ≡ Spark `div` ≡ DuckDB `//`)
-    // instead of paying PrIters eager-checkpoint job waves; at scale the
-    // frame exceeds the budget and the distributed loop runs unchanged.
-    if (edges.count() <= localEdgeBudget) {
-      import spark.implicits._
-      val es = edges.as[(Long, Long)].collect()
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-      val n = deg.size.toLong
-      if (n == 0) return Seq.empty[(Long, Long)].toDF("doc_id", "rank")
-      val teleport = (15L * (PrUnit / n)) / 100L
-      var ranks = new java.util.HashMap[Long, Long]()
-      deg.keySet().forEach(v => ranks.put(v, PrUnit / n))
-      for (_ <- 1 to PrIters) {
-        val inflow = new java.util.HashMap[Long, Long]()
-        val r = ranks
-        es.foreach { case (src, dst) =>
-          inflow.merge(dst, r.get(src) / deg.get(src), _ + _)
+    // r13 driver replay (DriverReplay): the recurrence is integer
+    // fixed-point BY DESIGN (portability), so a sub-budget edge frame
+    // replays operation-for-operation (Long `/` on non-negatives ≡
+    // Spark `div` ≡ DuckDB `//`) instead of paying PrIters
+    // eager-checkpoint job waves.
+    DriverReplay.collectWithin(edges.as[(Long, Long)], localEdgeBudget) match {
+      case Some(es) =>
+        val deg = new java.util.HashMap[Long, Long]()
+        es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
+        val n = deg.size.toLong
+        if (n == 0) return Seq.empty[(Long, Long)].toDF("doc_id", "rank")
+        val teleport = (15L * (PrUnit / n)) / 100L
+        var ranks = new java.util.HashMap[Long, Long]()
+        deg.keySet().forEach(v => ranks.put(v, PrUnit / n))
+        for (_ <- 1 to PrIters) {
+          val inflow = new java.util.HashMap[Long, Long]()
+          val r = ranks
+          es.foreach { case (src, dst) =>
+            inflow.merge(dst, r.get(src) / deg.get(src), _ + _)
+          }
+          val next = new java.util.HashMap[Long, Long]()
+          deg.keySet().forEach(v =>
+            next.put(v, teleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
+          ranks = next
         }
-        val next = new java.util.HashMap[Long, Long]()
-        deg.keySet().forEach(v =>
-          next.put(v, teleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
-        ranks = next
-      }
-      val rows = deg.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        .map(v => (v, ranks.get(v))).toSeq
-      return rows.toDF("doc_id", "rank")
+        val rows = deg.keySet().toArray.map(_.asInstanceOf[Long]).sorted
+          .map(v => (v, ranks.get(v))).toSeq
+        return rows.toDF("doc_id", "rank")
+      case None =>
     }
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
     val n = deg.count()
@@ -1123,70 +1125,58 @@ SELECT v AS doc_id, rank::BIGINT AS rank FROM pr WHERE iter = $PrIters"""
   // at 100 TB — pays the extra label-frame shuffles to buy waves.
   private val JumpsPerRound = 3
 
-  // r13 (guide §1.2; the broadcast-threshold posture): below this many
-  // SYMMETRIC edge rows the whole CC fixpoint runs as one driver
-  // union-find instead of distributed label-propagation waves. The
-  // pair graph of a dedup run is corpus-scaled — NOT bounded model
-  // state — so the distributed waves stay the default shape at scale
-  // (a 100 TB pair frame blows past any sane budget and takes the loop
-  // below unchanged); but a small edge frame pays ~2 + rounds
-  // multi-stage shuffle jobs of pure scheduling floor for a result a
-  // 10 ms driver pass produces identically (label = min reachable id;
-  // union-by-min-root ≡ min-label fixpoint — parity spec-pinned on
-  // both paths, and every CC query's oracle gate re-proves it
-  // end-to-end). Size-conditional execution with identical results is
-  // the same contract as Spark's own broadcast threshold; the budget
-  // is env-tunable and 2M edge rows ≈ 32 MB serialized, far under the
-  // driver's maxResultSize.
-  private[graft] val CcLocalEdgeBudget: Long =
-    sys.env.getOrElse("SPARK_GRAFT_GRAPH_LOCAL_EDGES",
-      sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_EDGES", "2000000")).toLong
-
   /** As [[connectedComponents]], also returning the number of
     * label-propagation rounds (cluster-wide job waves) the fixpoint
     * took — the scale cost a spec can pin (0 = the local union-find
     * path; pass localEdgeBudget = 0 to force the distributed waves). */
   def connectedComponentsWithRounds(pairs: DataFrame, documents: DataFrame,
-      localEdgeBudget: Long = CcLocalEdgeBudget): (DataFrame, Int) = {
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): (DataFrame, Int) = {
     val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = pairs
       .unionAll(pairs.select(col("y").as("x"), col("x").as("y")))
       .localCheckpoint()
-    if (edges.count() <= localEdgeBudget) {
-      import spark.implicits._
-      val es = edges.select(col("x"), col("y")).as[(Long, Long)].collect()
-      // union-find, roots kept at the component MINIMUM id — the same
-      // label the min-propagation fixpoint converges to
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(v: Long): Long = {
-        var r = v
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        // path compression
-        var c = v
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.get(c); parent.put(c, r); c = nxt
+    // r13 driver replay (DriverReplay): the pair graph is corpus-scaled,
+    // so at scale it takes the distributed waves below; a small one runs
+    // as one driver union-find instead of ~2 + rounds shuffle jobs of
+    // scheduling floor (label = min reachable id; union-by-min-root ≡
+    // min-label fixpoint — parity spec-pinned, oracle-gated per query).
+    DriverReplay.collectWithin(edges.select(col("x"), col("y")).as[(Long, Long)],
+        localEdgeBudget) match {
+      case Some(es) =>
+        // union-find, roots kept at the component MINIMUM id — the same
+        // label the min-propagation fixpoint converges to
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(v: Long): Long = {
+          var r = v
+          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+          // path compression
+          var c = v
+          while (parent.getOrDefault(c, c) != c) {
+            val nxt = parent.get(c); parent.put(c, r); c = nxt
+          }
+          r
         }
-        r
-      }
-      es.foreach { case (x, y) =>
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) {
-          // union keeps the MINIMUM id as root, so every final root is
-          // its component's min id by induction
-          if (rx < ry) parent.put(ry, rx) else parent.put(rx, ry)
+        es.foreach { case (x, y) =>
+          val rx = find(x); val ry = find(y)
+          if (rx != ry) {
+            // union keeps the MINIMUM id as root, so every final root is
+            // its component's min id by induction
+            if (rx < ry) parent.put(ry, rx) else parent.put(rx, ry)
+          }
         }
-      }
-      val labelRows = es.iterator.flatMap { case (x, y) => Iterator(x, y) }
-        .toSet[Long].toSeq.sorted.map(v => (v, find(v)))
-      val labels = labelRows.toDF("id", "label")
-      val out = documents.select(col("doc_id"))
-        .join(broadcast(labels.withColumnRenamed("id", "doc_id")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_id"),
-          (coalesce(col("label"), col("doc_id")) === col("doc_id"))
-            .cast("long").as("keep"))
-      return (out, 0)
+        val labelRows = es.iterator.flatMap { case (x, y) => Iterator(x, y) }
+          .toSet[Long].toSeq.sorted.map(v => (v, find(v)))
+        val labels = labelRows.toDF("id", "label")
+        val out = documents.select(col("doc_id"))
+          .join(broadcast(labels.withColumnRenamed("id", "doc_id")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("label"), col("doc_id")).as("cluster_id"),
+            (coalesce(col("label"), col("doc_id")) === col("doc_id"))
+              .cast("long").as("keep"))
+        return (out, 0)
+      case None =>
     }
     var labels = edges.select(col("x").as("id")).distinct()
       .select(col("id"), col("id").as("label")).localCheckpoint()
@@ -1748,46 +1738,45 @@ FROM scalars s JOIN named n USING (cluster_id) JOIN mode m USING (cluster_id)"""
 
   /** Synchronous deterministic LPA over an (x, y) pair list. */
   def labelPropagationEdges(pairs: DataFrame, rounds: Int = LpaRounds,
-      localEdgeBudget: Long = CcLocalEdgeBudget): DataFrame = {
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
     val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = pairs.unionAll(pairs.select(col("y").as("x"), col("x").as("y")))
       .select(col("x").as("src"), col("y").as("dst")).localCheckpoint()
-    // r13 size-adaptive local path (the connectedComponents posture):
-    // the synchronous plurality update — per round, v adopts
-    // (max neighbor-label count, tie min label) — replays on the
-    // driver round-for-round (same rounds cap, same unchanged-round
-    // early exit) below the edge budget; distributed waves unchanged
-    // above it.
-    if (edges.count() <= localEdgeBudget) {
-      import spark.implicits._
-      val es = edges.as[(Long, Long)].collect()
-      var labels = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => labels.putIfAbsent(s, s) }
-      var r = 0
-      var stable = false
-      while (r < rounds && !stable) {
-        // tally neighbor labels per dst: (dst, label) -> cnt
-        val tally = new java.util.HashMap[(Long, Long), Long]()
-        val l = labels
-        es.foreach { case (src, dst) =>
-          tally.merge((dst, l.get(src)), 1L, _ + _)
+    // r13 driver replay (DriverReplay): the synchronous plurality
+    // update — per round, v adopts (max neighbor-label count, tie min
+    // label) — replays round-for-round (same rounds cap, same
+    // unchanged-round early exit).
+    DriverReplay.collectWithin(edges.as[(Long, Long)], localEdgeBudget) match {
+      case Some(es) =>
+        var labels = new java.util.HashMap[Long, Long]()
+        es.foreach { case (s, _) => labels.putIfAbsent(s, s) }
+        var r = 0
+        var stable = false
+        while (r < rounds && !stable) {
+          // tally neighbor labels per dst: (dst, label) -> cnt
+          val tally = new java.util.HashMap[(Long, Long), Long]()
+          val l = labels
+          es.foreach { case (src, dst) =>
+            tally.merge((dst, l.get(src)), 1L, _ + _)
+          }
+          // argmax per dst: best (cnt desc, label asc)
+          val best = new java.util.HashMap[Long, (Long, Long)]()
+          tally.forEach { case ((dst, lab), cnt) =>
+            val cur = best.get(dst)
+            if (cur == null || cnt > cur._1 || (cnt == cur._1 && lab < cur._2))
+              best.put(dst, (cnt, lab))
+          }
+          val nl = new java.util.HashMap[Long, Long]()
+          best.forEach { case (dst, (_, lab)) => nl.put(dst, lab) }
+          stable = nl.equals(labels)
+          labels = nl
+          r += 1
         }
-        // argmax per dst: best (cnt desc, label asc)
-        val best = new java.util.HashMap[Long, (Long, Long)]()
-        tally.forEach { case ((dst, lab), cnt) =>
-          val cur = best.get(dst)
-          if (cur == null || cnt > cur._1 || (cnt == cur._1 && lab < cur._2))
-            best.put(dst, (cnt, lab))
-        }
-        val nl = new java.util.HashMap[Long, Long]()
-        best.forEach { case (dst, (_, lab)) => nl.put(dst, lab) }
-        stable = nl.equals(labels)
-        labels = nl
-        r += 1
-      }
-      val rows = labels.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        .map(v => (v, labels.get(v))).toSeq
-      return rows.toDF("v", "label")
+        val rows = labels.keySet().toArray.map(_.asInstanceOf[Long]).sorted
+          .map(v => (v, labels.get(v))).toSeq
+        return rows.toDF("v", "label")
+      case None =>
     }
     var labels = edges.select(col("src").as("v"))
       .distinct().select(col("v"), col("v").as("label")).localCheckpoint()

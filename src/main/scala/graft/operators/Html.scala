@@ -309,15 +309,13 @@ FROM e"""
       .localCheckpoint()
     val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
       .localCheckpoint()
-    // r13 size-adaptive local path (the connectedComponents posture):
-    // integer fixed-point recurrence over the HOST graph (bounded by
-    // HostCount at any corpus size) — driver replay below the edge
-    // budget, distributed waves unchanged above it.
+    // r13 driver replay (DriverReplay): integer fixed-point recurrence
+    // over the HOST graph (bounded by HostCount at any corpus size).
     val spark = documents.sparkSession
-    val ranksFinal: org.apache.spark.sql.DataFrame =
-      if (edges.count() <= graft.operators.Dedup.CcLocalEdgeBudget) {
-        import spark.implicits._
-        val es = edges.as[(String, String, Long)].collect()
+    import spark.implicits._
+    val ranksFinal: DataFrame =
+      DriverReplay.collectWithin(edges.as[(String, String, Long)],
+          DriverReplay.GraphEdgeBudget).map { es =>
         val outW = new java.util.HashMap[String, Long]()
         es.foreach { case (src, _, w) => outW.merge(src, w, _ + _) }
         var ranks = new java.util.HashMap[String, Long]()
@@ -336,7 +334,7 @@ FROM e"""
         val rows = outW.keySet().toArray.map(_.asInstanceOf[String]).sorted
           .map(v => (v, ranks.get(v))).toSeq
         rows.toDF("v", "rank")
-      } else {
+      }.getOrElse {
         var ranks = deg.select(col("src").as("v"), lit(HrUnit / HostCount).as("rank"))
         for (_ <- 1 to HrIters) {
           val contrib = ranks.join(deg.withColumnRenamed("src", "v"), "v")

@@ -802,36 +802,49 @@ WHERE rn = 1"""
       parentOf: Column => Column = c => floor(c / 10).cast("long"),
       rounds: Int = HierRounds): DataFrame = {
     val keys = customer.select(col("c_custkey").cast("long").as("k"))
-    // non-root = parent differs from self AND exists in the table; a
-    // self-parent (key 0 under div 10) is a ROOT, not a cycle
     val pRaw = keys.select(col("k"), parentOf(col("k")).as("p"))
-    val known = keys.select(col("k").as("p"))
-    val nonRoot = pRaw.where(col("p") =!= col("k"))
-      .join(known, Seq("p"), "left_semi")
-      .select(col("k"), col("p").as("anc"), lit(1L).as("d"))
+    val state = pointerDoubling(keys, pRaw.withColumn("w", lit(1L)),
+      _ + _, rootLabel = 0L, rounds)
+    val hasChild = pRaw.where(col("p") =!= col("k"))
+      .select(col("p").as("k")).distinct().withColumn("hc", lit(1L))
+    state.join(hasChild, Seq("k"), "left")
+      .select(col("k").as("c_custkey"), col("anc").as("root"), col("w").as("depth"),
+        when(col("hc").isNull, 1L).otherwise(0L).as("is_leaf"))
+  }
+
+  /** Pointer doubling over a parent-pointer forest (C47, C77): `edges`
+    * holds (k, p, w) — node, parent, edge label — for every key in
+    * `keys`. Returns (k, anc, w): each node's root and its path label
+    * to that root, the edge labels folded with the associative
+    * `combine`; a root carries `rootLabel`, the identity of `combine`.
+    * Non-root = parent differs from self AND exists in `keys`; a
+    * self-parent (key 0 under div 10) is a ROOT, not a cycle. */
+  private def pointerDoubling(keys: DataFrame, edges: DataFrame,
+      combine: (Column, Column) => Column, rootLabel: Long,
+      rounds: Int): DataFrame = {
+    val nonRoot = edges.where(col("p") =!= col("k"))
+      .join(keys.select(col("k").as("p")), Seq("p"), "left_semi")
+      .select(col("k"), col("p").as("anc"), col("w"))
     var state = nonRoot
       .unionAll(keys.join(nonRoot.select(col("k")), Seq("k"), "left_anti")
-        .select(col("k"), col("k").as("anc"), lit(0L).as("d")))
+        .select(col("k"), col("k").as("anc"), lit(rootLabel).as("w")))
       .localCheckpoint()
     // early exit (r8 verdict): a row moves next round iff its anc is
     // itself a child; once no row is, every remaining wave (here AND
-    // in the oracle's fixed unroll) is the identity — the forest depth,
-    // not the unroll budget, bounds the checkpoint tax
+    // in the oracle's fixed unroll) combines with the root's identity
+    // label — the forest depth, not the unroll budget, bounds the
+    // checkpoint tax
     val parents = nonRoot.select(col("k").as("anc")).distinct().localCheckpoint()
     var r = 0
     while (r < rounds &&
         state.join(parents, Seq("anc"), "left_semi").limit(1).count() > 0) {
-      val m = state.select(col("k").as("anc"), col("anc").as("anc2"), col("d").as("d2"))
+      val m = state.select(col("k").as("anc"), col("anc").as("anc2"), col("w").as("w2"))
       state = state.join(m, "anc")
-        .select(col("k"), col("anc2").as("anc"), (col("d") + col("d2")).as("d"))
+        .select(col("k"), col("anc2").as("anc"), combine(col("w"), col("w2")).as("w"))
         .localCheckpoint()
       r += 1
     }
-    val hasChild = pRaw.where(col("p") =!= col("k"))
-      .select(col("p").as("k")).distinct().withColumn("hc", lit(1L))
-    state.join(hasChild, Seq("k"), "left")
-      .select(col("k").as("c_custkey"), col("anc").as("root"), col("d").as("depth"),
-        when(col("hc").isNull, 1L).otherwise(0L).as("is_leaf"))
+    state
   }
 
   val hierarchyFlattenSql: String =
@@ -2609,32 +2622,13 @@ FROM g"""
   // same product.
   def bomRollup(customer: DataFrame, rounds: Int = HierRounds): DataFrame = {
     val keys = customer.select(col("c_custkey").cast("long").as("k"))
-    val pRaw = keys.select(col("k"), expr("k div 10").as("p"),
-      (lit(1L) + pmod(col("k"), lit(5))).as("q"))
-    val known = keys.select(col("k").as("p"))
-    val nonRoot = pRaw.where(col("p") =!= col("k"))
-      .join(known, Seq("p"), "left_semi")
-      .select(col("k"), col("p").as("anc"), col("q").as("pq"))
-    var state = nonRoot
-      .unionAll(keys.join(nonRoot.select(col("k")), Seq("k"), "left_anti")
-        .select(col("k"), col("k").as("anc"), lit(1L).as("pq")))
-      .localCheckpoint()
-    // fixpoint early exit — see hierarchyFlatten: once no anc is a
-    // child, remaining waves multiply by pq2 = 1 (identity)
-    val parents = nonRoot.select(col("k").as("anc")).distinct().localCheckpoint()
-    var r = 0
-    while (r < rounds &&
-        state.join(parents, Seq("anc"), "left_semi").limit(1).count() > 0) {
-      val m = state.select(col("k").as("anc"), col("anc").as("anc2"), col("pq").as("pq2"))
-      state = state.join(m, "anc")
-        .select(col("k"), col("anc2").as("anc"), (col("pq") * col("pq2")).as("pq"))
-        .localCheckpoint()
-      r += 1
-    }
-    val totals = state.groupBy(col("anc")).agg(sum(col("pq")).as("root_total_qty"))
+    val edges = keys.select(col("k"), expr("k div 10").as("p"),
+      (lit(1L) + pmod(col("k"), lit(5))).as("w"))
+    val state = pointerDoubling(keys, edges, _ * _, rootLabel = 1L, rounds)
+    val totals = state.groupBy(col("anc")).agg(sum(col("w")).as("root_total_qty"))
     state.join(totals, "anc")
       .select(col("k").as("c_custkey"), col("anc").as("root"),
-        col("pq").as("path_qty"), col("root_total_qty"))
+        col("w").as("path_qty"), col("root_total_qty"))
   }
 
   val bomRollupSql: String =
@@ -4656,51 +4650,51 @@ FROM agg"""
   /** The HITS recurrence over an explicit distinct (c, s) edge frame —
     * split out for the local/distributed parity spec. */
   private[graft] def hitsEdges(e0: DataFrame,
-      localEdgeBudget: Long = graft.operators.Dedup.CcLocalEdgeBudget): DataFrame = {
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
     val spark = e0.sparkSession
+    import spark.implicits._
     val d38 = "decimal(38,0)"
     val edges = e0.localCheckpoint()
-    // r13 size-adaptive local path (the connectedComponents posture):
-    // the recurrence is exact-integer BY DESIGN (1e-12 units, decDiv
-    // renorm), so a sub-budget edge frame replays on the driver in
-    // BigInteger — bit-identical (decDiv on non-negatives ≡ BigInt
-    // divide) — instead of 3 rounds × (2 joins + 2 aggregates + 2
-    // single-partition windows). At scale the distinct (c, s) frame
-    // exceeds the budget and the distributed loop runs unchanged.
-    if (edges.count() <= localEdgeBudget) {
-      import spark.implicits._
-      val es = edges.select(col("c").cast("long"), col("s").cast("long"))
-        .as[(Long, Long)].collect()
-      val unit = java.math.BigInteger.valueOf(HitsUnit)
-      var h = new java.util.HashMap[Long, java.math.BigInteger]()
-      var a = new java.util.HashMap[Long, java.math.BigInteger]()
-      es.foreach { case (c, s) => h.putIfAbsent(c, unit); a.putIfAbsent(s, unit) }
-      for (_ <- 1 to HitsIters) {
-        val ar = new java.util.HashMap[Long, java.math.BigInteger]()
-        val hCur = h
-        es.foreach { case (c, s) =>
-          ar.merge(s, hCur.get(c), (x, y) => x.add(y))
+    // r13 driver replay (DriverReplay): the recurrence is exact-integer
+    // BY DESIGN (1e-12 units, decDiv renorm), so a sub-budget edge frame
+    // replays in BigInteger — bit-identical (decDiv on non-negatives ≡
+    // BigInt divide) — instead of 3 rounds × (2 joins + 2 aggregates +
+    // 2 single-partition windows).
+    DriverReplay.collectWithin(
+        edges.select(col("c").cast("long"), col("s").cast("long")).as[(Long, Long)],
+        localEdgeBudget) match {
+      case Some(es) =>
+        val unit = java.math.BigInteger.valueOf(HitsUnit)
+        var h = new java.util.HashMap[Long, java.math.BigInteger]()
+        var a = new java.util.HashMap[Long, java.math.BigInteger]()
+        es.foreach { case (c, s) => h.putIfAbsent(c, unit); a.putIfAbsent(s, unit) }
+        for (_ <- 1 to HitsIters) {
+          val ar = new java.util.HashMap[Long, java.math.BigInteger]()
+          val hCur = h
+          es.foreach { case (c, s) =>
+            ar.merge(s, hCur.get(c), (x, y) => x.add(y))
+          }
+          var am = java.math.BigInteger.ZERO
+          ar.forEach((_, v) => if (v.compareTo(am) > 0) am = v)
+          val aNext = new java.util.HashMap[Long, java.math.BigInteger]()
+          ar.forEach((s, v) => aNext.put(s, v.multiply(unit).divide(am)))
+          a = aNext
+          val hr = new java.util.HashMap[Long, java.math.BigInteger]()
+          es.foreach { case (c, s) =>
+            hr.merge(c, a.get(s), (x, y) => x.add(y))
+          }
+          var hm = java.math.BigInteger.ZERO
+          hr.forEach((_, v) => if (v.compareTo(hm) > 0) hm = v)
+          val hNext = new java.util.HashMap[Long, java.math.BigInteger]()
+          hr.forEach((c, v) => hNext.put(c, v.multiply(unit).divide(hm)))
+          h = hNext
         }
-        var am = java.math.BigInteger.ZERO
-        ar.forEach((_, v) => if (v.compareTo(am) > 0) am = v)
-        val aNext = new java.util.HashMap[Long, java.math.BigInteger]()
-        ar.forEach((s, v) => aNext.put(s, v.multiply(unit).divide(am)))
-        a = aNext
-        val hr = new java.util.HashMap[Long, java.math.BigInteger]()
-        es.foreach { case (c, s) =>
-          hr.merge(c, a.get(s), (x, y) => x.add(y))
-        }
-        var hm = java.math.BigInteger.ZERO
-        hr.forEach((_, v) => if (v.compareTo(hm) > 0) hm = v)
-        val hNext = new java.util.HashMap[Long, java.math.BigInteger]()
-        hr.forEach((c, v) => hNext.put(c, v.multiply(unit).divide(hm)))
-        h = hNext
-      }
-      val hubRows = h.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        .map(c => ("hub", c, h.get(c).longValueExact())).toSeq
-      val authRows = a.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        .map(s => ("authority", s, a.get(s).longValueExact())).toSeq
-      return (hubRows ++ authRows).toDF("node_type", "node_id", "score")
+        val hubRows = h.keySet().toArray.map(_.asInstanceOf[Long]).sorted
+          .map(c => ("hub", c, h.get(c).longValueExact())).toSeq
+        val authRows = a.keySet().toArray.map(_.asInstanceOf[Long]).sorted
+          .map(s => ("authority", s, a.get(s).longValueExact())).toSeq
+        return (hubRows ++ authRows).toDF("node_type", "node_id", "score")
+      case None =>
     }
     var hub = edges.select(col("c")).distinct()
       .select(col("c"), lit(HitsUnit).as("h"))

@@ -1297,19 +1297,6 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
       transform(asD(col("embedding")), x =>
         round(x * lit(1000000.0), 0).cast("long") + lit(KmShift)).as("xi"))
 
-  // r13 (guide §1.2; the CC/graph local-replay posture): below this
-  // many vector rows the ITERATION state (the collected corpus) fits
-  // the driver comfortably (100k × 64 longs ≈ 52 MB, far under
-  // maxResultSize), so the Lloyd update rounds / k-center greedy rounds
-  // replay locally instead of paying (iters−1)·(corpus pass + collect)
-  // cluster-wide job waves. Above the budget — any real corpus at
-  // scale — the distributed loops run unchanged. Exact by
-  // construction: the recurrences are pure integer arithmetic (the
-  // L82/L83 design contract), parity spec-pinned with both paths
-  // forced.
-  private[graft] val VecLocalRowBudget: Long =
-    sys.env.getOrElse("SPARK_GRAFT_VEC_LOCAL_ROWS", "100000").toLong
-
   /** Distance+argmin columns via the codegen'd [[graft.functions.KmDist]]
     * loop (PcScore posture — the nested transform/zip_with/aggregate
     * HOF chain it replaces was interpreted per element). */
@@ -1349,32 +1336,43 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
     Some((best, bestIdx))
   }
 
-  private def collectPts(pts: DataFrame, seed: String): Array[(Long, Array[java.lang.Long], Long)] =
-    pts.withColumn("h", graft.functions.Portable.md5Long(lit(seed), col("vec_id")))
-      .select(col("vec_id"), col("xi"), col("h")).collect()
-      .map { r =>
+  /** (vec_id, xi, md5 draw) of every point when there are at most
+    * `budget` of them — the driver-replay side of k-means / k-center
+    * (DriverReplay); None sends the caller to its distributed loop. */
+  private def collectPts(pts: DataFrame, seed: String,
+      budget: Long): Option[Array[(Long, Array[java.lang.Long], Long)]] =
+    DriverReplay.collectWithin(
+      pts.withColumn("h", graft.functions.Portable.md5Long(lit(seed), col("vec_id")))
+        .select(col("vec_id"), col("xi"), col("h")), budget)
+      .map(_.map { r =>
         val xi = if (r.isNullAt(1)) null
           else r.getSeq[Any](1).map {
             case null => null
             case v: Long => java.lang.Long.valueOf(v)
           }.toArray
         (r.getLong(0), xi, r.getLong(2))
-      }
+      })
 
+  // r13 driver replay (DriverReplay): below the vector-row budget the
+  // ITERATION state (the collected corpus) fits the driver, so the
+  // Lloyd update rounds / k-center greedy rounds replay locally instead
+  // of paying (iters−1)·(corpus pass + collect) cluster-wide job waves.
+  // Exact by construction: the recurrences are pure integer arithmetic
+  // (the L82/L83 design contract), parity spec-pinned with both paths
+  // forced — malformed (null-holed / wrong-length) vectors included,
+  // which neither path lets move a center or win a round.
   def kmeansAssign(embeddings: DataFrame, k: Int = KmK,
       iters: Int = KmAssignIters,
-      localRowBudget: Long = VecLocalRowBudget): DataFrame = {
+      localRowBudget: Long = DriverReplay.VectorRowBudget): DataFrame = {
     val spark = embeddings.sparkSession
     val pts = kmScaled(embeddings)
     def assigned(cs: IndexedSeq[Array[Long]]): DataFrame =
       kmAssignCols(spark, pts, cs)
-    if (embeddings.count() <= localRowBudget) {
-      // ONE collect; seeds + every update round replay on the driver
-      // (the recurrence is integer-exact, so replay ≡ the distributed
-      // loop — parity spec-pinned). The FINAL assignment stays the
-      // distributed map: the released frame is corpus-sized and the
-      // plan keeps its scan → project shape.
-      val rows = collectPts(pts, "km")
+    // ONE collect; seeds + every update round replay on the driver. The
+    // FINAL assignment stays the distributed map either way: the
+    // released frame is corpus-sized and the plan keeps its
+    // scan → project shape.
+    val cents = collectPts(pts, "km", localRowBudget).map { rows =>
       var cents: IndexedSeq[Array[Long]] = rows
         .sortBy(r => (r._3, r._1)).take(k)
         .map(r => r._2.map(Long.unbox)).toIndexedSeq
@@ -1393,30 +1391,37 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
           else Array.tabulate(cents(c).length)(i => sums(c)(i) / ns(c))
         }
       }
-      return assigned(cents).select(col("vec_id"), col("cid"), col("dist"))
-    }
-    val seedRows = pts
-      .withColumn("h", graft.functions.Portable.md5Long(lit("km"), col("vec_id")))
-      .orderBy(col("h"), col("vec_id")).limit(k)
-      .select(col("h"), col("vec_id"), col("xi")).collect()
-    var cents: IndexedSeq[Array[Long]] = seedRows
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-      .map(_.getSeq[Long](2).toArray).toIndexedSeq
-    for (_ <- 1 until iters) {
-      val upd = assigned(cents)
-        .select(col("cid"), posexplode(col("xi")).as(Seq("pos", "v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getLong(0))
-      cents = cents.indices.map { c =>
-        upd.get(c + 1L) match {
-          case Some(rows) =>
-            val byPos = rows.map(r => r.getInt(1) -> r.getLong(2) / r.getLong(3)).toMap
-            Array.tabulate(cents(c).length)(byPos(_))
-          case None => cents(c)
+      cents
+    }.getOrElse {
+      val seedRows = pts
+        .withColumn("h", graft.functions.Portable.md5Long(lit("km"), col("vec_id")))
+        .orderBy(col("h"), col("vec_id")).limit(k)
+        .select(col("h"), col("vec_id"), col("xi")).collect()
+      var cents: IndexedSeq[Array[Long]] = seedRows
+        .sortBy(r => (r.getLong(0), r.getLong(1)))
+        .map(_.getSeq[Long](2).toArray).toIndexedSeq
+      for (_ <- 1 until iters) {
+        // a malformed vector has no center (null cid) and moves none —
+        // the local kmDistLocal skip. Dropped after the collect: a
+        // filter on cid would be pushed below the projection and
+        // evaluate KmDist twice per row.
+        val upd = assigned(cents)
+          .select(col("cid"), posexplode(col("xi")).as(Seq("pos", "v")))
+          .groupBy(col("cid"), col("pos"))
+          .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
+          .collect()
+          .filterNot(_.isNullAt(0))
+          .groupBy(_.getLong(0))
+        cents = cents.indices.map { c =>
+          upd.get(c + 1L) match {
+            case Some(rows) =>
+              val byPos = rows.map(r => r.getInt(1) -> r.getLong(2) / r.getLong(3)).toMap
+              Array.tabulate(cents(c).length)(byPos(_))
+            case None => cents(c)
+          }
         }
       }
+      cents
     }
     assigned(cents).select(col("vec_id"), col("cid"), col("dist"))
   }
@@ -1464,23 +1469,21 @@ SELECT vec_id, cid, dist FROM a$KmAssignIters"""
   private val KcK = 8
 
   def kcenterSelect(embeddings: DataFrame, k: Int = KcK,
-      localRowBudget: Long = VecLocalRowBudget): DataFrame = {
+      localRowBudget: Long = DriverReplay.VectorRowBudget): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val pts = kmScaled(embeddings)
-    if (embeddings.count() <= localRowBudget) {
-      // ONE collect; the whole greedy recurrence replays on the driver
-      // (K−1 cluster-wide waves of a corpus pass + singleton collect
-      // each become array walks over integer-exact state; output is
-      // ≤K rows either way — parity spec-pinned against the
-      // distributed loop).
-      val rows = collectPts(pts, "kc")
+    // ONE collect; the whole greedy recurrence replays on the driver
+    // (K−1 cluster-wide waves of a corpus pass + singleton collect each
+    // become array walks over integer-exact state; output is ≤K rows
+    // either way).
+    val selected = collectPts(pts, "kc", localRowBudget).map { rows =>
       val first = rows.minBy(r => (r._3, r._1))
       var selected = Vector((first._1, first._2.map(Long.unbox), 0L))
       for (_ <- 2 to k) {
         // winner = max min-dist, tie → smaller vec_id (the distributed
-        // min_by(struct(-mind, vec_id)); null-dist rows never win —
-        // min_by skips null-ordering rows)
+        // min_by(struct(-mind, vec_id))); a null-dist (malformed) row
+        // never wins on either path
         var wid = 0L; var wxi: Array[Long] = null; var wd = -1L
         rows.foreach { case (id, xi, _) =>
           kmDistLocal(xi, selected.map(_._2)) match {
@@ -1493,22 +1496,25 @@ SELECT vec_id, cid, dist FROM a$KmAssignIters"""
         }
         selected :+= ((wid, wxi, wd))
       }
-      return selected.zipWithIndex
-        .map { case ((id, _, radius), i) => ((i + 1).toLong, id, radius) }
-        .toDF("rk", "vec_id", "radius")
-    }
-    val first = pts
-      .withColumn("h", graft.functions.Portable.md5Long(lit("kc"), col("vec_id")))
-      .orderBy(col("h"), col("vec_id")).limit(1)
-      .select(col("vec_id"), col("xi")).collect()(0)
-    var selected = Vector((first.getLong(0), first.getSeq[Long](1).toArray, 0L))
-    for (_ <- 2 to k) {
-      val winner = kmAssignCols(spark, pts, selected.map(_._2))
-        .withColumn("mind", col("dist"))
-        .agg(min_by(struct(col("vec_id"), col("xi"), col("mind")),
-          struct(-col("mind"), col("vec_id"))).as("m"))
-        .select(col("m.vec_id"), col("m.xi"), col("m.mind")).collect()(0)
-      selected :+= ((winner.getLong(0), winner.getSeq[Long](1).toArray, winner.getLong(2)))
+      selected
+    }.getOrElse {
+      val first = pts
+        .withColumn("h", graft.functions.Portable.md5Long(lit("kc"), col("vec_id")))
+        .orderBy(col("h"), col("vec_id")).limit(1)
+        .select(col("vec_id"), col("xi")).collect()(0)
+      var selected = Vector((first.getLong(0), first.getSeq[Long](1).toArray, 0L))
+      for (_ <- 2 to k) {
+        // min_by skips a null ordering, but struct(-mind, vec_id) is
+        // never null — a malformed row (null mind) would sort FIRST and
+        // win — so its ordering is nulled outright
+        val winner = kmAssignCols(spark, pts, selected.map(_._2))
+          .withColumn("mind", col("dist"))
+          .agg(min_by(struct(col("vec_id"), col("xi"), col("mind")),
+            when(col("mind").isNotNull, struct(-col("mind"), col("vec_id")))).as("m"))
+          .select(col("m.vec_id"), col("m.xi"), col("m.mind")).collect()(0)
+        selected :+= ((winner.getLong(0), winner.getSeq[Long](1).toArray, winner.getLong(2)))
+      }
+      selected
     }
     selected.zipWithIndex
       .map { case ((id, _, radius), i) => ((i + 1).toLong, id, radius) }

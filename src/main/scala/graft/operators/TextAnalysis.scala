@@ -3501,15 +3501,13 @@ FROM scored ORDER BY score_ppm DESC, phrase ASC LIMIT $RakeTopK"""
       .localCheckpoint()
     val n = strength.count()
     val teleport = (15L * (TrUnit / n)) / 100L
-    // r13 size-adaptive local path (the connectedComponents posture):
-    // integer fixed-point recurrence, replayed on the driver below the
-    // edge budget (decDiv on non-negatives ≡ BigInteger divide), the
-    // distributed waves unchanged above it.
+    // r13 driver replay (DriverReplay): integer fixed-point recurrence
+    // (decDiv on non-negatives ≡ BigInteger divide).
     val spark = documents.sparkSession
+    import spark.implicits._
     val ranksFinal: DataFrame =
-      if (edges.count() <= graft.operators.Dedup.CcLocalEdgeBudget) {
-        import spark.implicits._
-        val es = edges.as[(String, String, Long)].collect()
+      DriverReplay.collectWithin(edges.as[(String, String, Long)],
+          DriverReplay.GraphEdgeBudget).map { es =>
         val s = new java.util.HashMap[String, Long]()
         es.foreach { case (src, _, wt) => s.merge(src, wt, _ + _) }
         var ranks = new java.util.HashMap[String, Long]()
@@ -3531,7 +3529,7 @@ FROM scored ORDER BY score_ppm DESC, phrase ASC LIMIT $RakeTopK"""
         val rows = s.keySet().toArray.map(_.asInstanceOf[String]).sorted
           .map(v => (v, ranks.get(v))).toSeq
         rows.toDF("v", "rank")
-      } else {
+      }.getOrElse {
         var ranks = strength.select(col("src").as("v"), lit(TrUnit / n).as("rank"))
         for (_ <- 1 to TrIters) {
           val contrib = ranks

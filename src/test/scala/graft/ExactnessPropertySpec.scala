@@ -578,7 +578,11 @@ class ExactnessPropertySpec extends SparkSpec {
         val base = Seq(0.0, 5.0, -5.0)(c)
         (id, Seq.fill(6)(math.rint((base + rnd.nextGaussian()) * 100) / 100))
       } ++ Seq((n + 1L, (1 to 6).map(_ => 0.42)), (n + 2L, (1 to 6).map(_ => 0.42)))
-      val df = emb.toDF("vec_id", "embedding")
+      // a null-holed vector: malformed, so it neither moves a k-means
+      // center nor wins a k-center round on either path
+      val holed = Seq((n + 3L, Seq[java.lang.Double](9.0, null, 9.0, 9.0, 9.0, 9.0)))
+        .toDF("vec_id", "embedding")
+      val df = emb.toDF("vec_id", "embedding").unionByName(holed)
       val kmL = Similarity.kmeansAssign(df, localRowBudget = Long.MaxValue)
         .orderBy("vec_id").collect().toSeq
       val kmD = Similarity.kmeansAssign(df, localRowBudget = -1L)
@@ -590,6 +594,25 @@ class ExactnessPropertySpec extends SparkSpec {
         .orderBy("rk").collect().toSeq
       assert(kcL == kcD, s"kcenter diverged (trial $t):\n$kcL\nvs\n$kcD")
     }
+  }
+
+  test("driver replay takes exactly budget rows locally and budget + 1 distributed") {
+    import graft.operators.DriverReplay
+    val ds = spark.range(5).as[Long]
+    assert(DriverReplay.collectWithin(ds, 5L).map(_.toSeq.sorted) == Some(0L to 4L))
+    assert(DriverReplay.collectWithin(ds, 4L).isEmpty)
+    // the parity specs' forcing budgets: -1 is distributed even on an
+    // empty input, Long.MaxValue always replays
+    assert(DriverReplay.collectWithin(ds.limit(0), -1L).isEmpty)
+    assert(DriverReplay.collectWithin(ds, Long.MaxValue).isDefined)
+    // through an operator: 2 pairs are 4 symmetric edge rows, and CC
+    // reports 0 rounds on the driver side, > 0 on the distributed one
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("x", "y")
+    val docs = (1L to 4L).toDF("doc_id")
+    val (local, r4) = Dedup.connectedComponentsWithRounds(pairs, docs, 4L)
+    val (dist, r3) = Dedup.connectedComponentsWithRounds(pairs, docs, 3L)
+    assert(r4 == 0 && r3 > 0, s"rounds at budget 4: $r4, at budget 3: $r3")
+    assert(local.orderBy("doc_id").collect().toSeq == dist.orderBy("doc_id").collect().toSeq)
   }
 
   test("weighted median crossing matches a reference fold on random groups (C33 property)") {
