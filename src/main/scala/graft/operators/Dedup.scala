@@ -40,16 +40,24 @@ object Dedup {
   /** Shingles as 60-bit md5 longs: the intersection joins shuffle 8-byte
     * keys instead of ~25-byte strings (≈2× less shuffle, long compares).
     * The oracle hashes identically, so even a (≈4e-9) collision would
-    * change both engines the same way. */
+    * change both engines the same way.
+    *
+    * Lazily checkpointed: every caller reads the frame several times
+    * (sizes, candidates, both sides of the verify join), so the
+    * shingle explode + md5 runs once, in the first job that needs it.
+    * A checkpoint is never matched by plan in a later query, so a
+    * re-read of changed files is never served these shingles. */
   private def shingleHashedDf(documents: DataFrame): DataFrame =
     shingleDf(documents).select(col("doc_id"), md5Long(lit("g"), col("s")).as("s"))
+      .localCheckpoint(eager = false)
 
   private val shingleHashedSqlCte =
     s"shh AS (SELECT doc_id, ${md5LongSql("'g'", "s")} AS s FROM sh)"
 
-  /** Exact Jaccard over full shingle sets, for a candidate pair set
-    * with columns (x, y). One shuffle join per side on doc_id. */
-  private def exactJaccard(cands: DataFrame, sh: DataFrame, sizes: DataFrame): DataFrame = {
+  /** Shared-shingle count and both set sizes, (x, y, common, nx, ny),
+    * for a candidate pair set with columns (x, y). One shuffle join
+    * per side on doc_id. */
+  private def commonCounts(cands: DataFrame, sh: DataFrame, sizes: DataFrame): DataFrame = {
     val shx = sh.select(col("doc_id").as("x"), col("s"))
     val shy = sh.select(col("doc_id").as("y"), col("s"))
     cands
@@ -57,9 +65,27 @@ object Dedup {
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("common"))
       .join(sizes.select(col("doc_id").as("x"), col("n").as("nx")), "x")
       .join(sizes.select(col("doc_id").as("y"), col("n").as("ny")), "y")
+  }
+
+  /** Exact Jaccard over full shingle sets, thresholded at 0.5. */
+  private def exactJaccard(cands: DataFrame, sh: DataFrame, sizes: DataFrame): DataFrame =
+    commonCounts(cands, sh, sizes)
       .select(col("x"), col("y"),
         (col("common") / (col("nx") + col("ny") - col("common"))).as("jaccard"))
       .where(col("jaccard") >= 0.5)
+
+  /** Pairs (x < y) sharing at least MinCooc shingles whose document
+    * frequency is at most MaxDf — the L2 / L109 candidate generator. */
+  private def rareShingleCands(sh: DataFrame): DataFrame = {
+    val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .where(col("df") <= MaxDf).select(col("s"))
+    val rareSh = sh.join(rare, "s")
+    rareSh.select(col("s"), col("doc_id").as("x"))
+      .join(rareSh.select(col("s"), col("doc_id").as("y")), "s")
+      .where(col("x") < col("y"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nco"))
+      .where(col("nco") >= MinCooc)
+      .select(col("x"), col("y"))
   }
 
   private val exactJaccardSql =
@@ -98,24 +124,9 @@ WHERE common / (sx.n + sy.n - common) >= 0.5"""
   private val ContainTau = 0.8
 
   def containmentDedup(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= MaxDf).select(col("s"))
-    val rareSh = sh.join(rare, "s")
-    val cands = rareSh.select(col("s"), col("doc_id").as("x"))
-      .join(rareSh.select(col("s"), col("doc_id").as("y")), "s")
-      .where(col("x") < col("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nco"))
-      .where(col("nco") >= MinCooc)
-      .select(col("x"), col("y"))
-    val shx = sh.select(col("doc_id").as("x"), col("s"))
-    val shy = sh.select(col("doc_id").as("y"), col("s"))
-    cands
-      .join(shx, "x").join(shy, Seq("y", "s"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("doc_id").as("x"), col("n").as("nx")), "x")
-      .join(sizes.select(col("doc_id").as("y"), col("n").as("ny")), "y")
+    commonCounts(rareShingleCands(sh), sh, sizes)
       .select(col("x"), col("y"), col("common"),
         round(col("common").cast("double") / col("nx"), 6).as("c_xy"),
         round(col("common").cast("double") / col("ny"), 6).as("c_yx"))
@@ -146,18 +157,9 @@ WHERE round(common::DOUBLE / sx.n, 6) >= $ContainTau
    OR round(common::DOUBLE / sy.n, 6) >= $ContainTau"""
 
   def ngramJaccard(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= MaxDf).select(col("s"))
-    val rareSh = sh.join(rare, "s")
-    val cands = rareSh.select(col("s"), col("doc_id").as("x"))
-      .join(rareSh.select(col("s"), col("doc_id").as("y")), "s")
-      .where(col("x") < col("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nco"))
-      .where(col("nco") >= MinCooc)
-      .select(col("x"), col("y"))
-    exactJaccard(cands, sh, sizes)
+    exactJaccard(rareShingleCands(sh), sh, sizes)
   }
 
   val ngramJaccardSql: String =
@@ -359,7 +361,7 @@ GROUP BY tau"""
   // one (token) exchange for df + one for the prefix self-join; the
   // verify join only sees candidates.
   def prefixJoin(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val dfs = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
@@ -370,10 +372,10 @@ GROUP BY tau"""
       // prefix length for τ = 1/2: n − ceil(n/2) + 1 = n/2 + 1 (int div)
       .where(col("rk") <= col("n") - (col("n") + 1) / 2 + 1)
       .select(col("s"), col("doc_id"), col("n"), col("rk"))
-      // r13 (guide §5): cached — both sides of the prefix self-join
-      // consume this frame and exchange reuse misses across the
-      // aliased projections, re-running the df join + per-doc window
-      .cache()
+      // materialized once: both sides of the prefix self-join consume
+      // this frame and exchange reuse misses across the aliased
+      // projections, which would re-run the df join + per-doc window
+      .localCheckpoint(eager = false)
     // PPJoin positional filter (exact, Xiao et al.): a shared prefix
     // token at positions (rkx, rky) bounds the overlap by
     // 1 + min(nx − rkx, ny − rky); J >= τ needs overlap >=
@@ -421,33 +423,38 @@ $exactJaccardSql"""
       Array.fill(NumHashes)(rnd.nextLong() & 0xFFFFFFFFL))
   }
 
-  /** (doc_id, band, key) minhash band keys from a hashed-shingle frame
-    * — shared by [[minhashLsh]] (self-join) and
-    * [[minhashContamination]] (corpus-vs-benchmark join). */
-  private def minhashBandsFrom(sh: DataFrame): DataFrame = {
-    // 32-bit base = low bits of the already-hashed shingle: the shingle
-    // explode+md5 runs once total (cached), not once per consumer.
+  /** (doc_id, h0..h23) minhash signatures from a hashed-shingle frame.
+    * The 32-bit base is the low bits of the already-hashed shingle, so
+    * the shingle explode+md5 runs once total, not once per consumer. */
+  private def minhashSigs(sh: DataFrame): DataFrame = {
     val based = sh.select(col("doc_id"), col("s").bitwiseAND(0xFFFFFFFFL).as("base"))
-    val sigs = based.groupBy(col("doc_id")).agg(
+    based.groupBy(col("doc_id")).agg(
       min(col("base").bitwiseXOR(mixC(0)) * mixA(0)).as("h0"),
       (1 until NumHashes).map(j =>
         min(col("base").bitwiseXOR(mixC(j)) * mixA(j)).as(s"h$j")): _*)
+  }
+
+  /** (doc_id, band, key) minhash band keys from a signature frame —
+    * shared by [[minhashLsh]] (self-join), the calibrations and
+    * [[minhashContamination]] (corpus-vs-benchmark join). */
+  private def minhashBandsFrom(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"),
       explode(array((0 until NumBands).map(b =>
         struct(lit(b).as("band"),
           array((0 until BandRows).map(r => col(s"h${b * BandRows + r}")): _*).as("key"))): _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
 
-  def minhashLsh(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val withBands = minhashBandsFrom(sh)
-    val cands = withBands.select(col("band"), col("key"), col("doc_id").as("x"))
-      .join(withBands.select(col("band"), col("key"), col("doc_id").as("y")), Seq("band", "key"))
+  /** Distinct pairs (x < y) sharing any band key. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.select(col("band"), col("key"), col("doc_id").as("x"))
+      .join(bands.select(col("band"), col("key"), col("doc_id").as("y")), Seq("band", "key"))
       .where(col("x") < col("y"))
       .select(col("x"), col("y")).distinct()
-    exactJaccard(cands, sh, sizes)
+
+  def minhashLsh(documents: DataFrame): DataFrame = {
+    val sh = shingleHashedDf(documents)
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    exactJaccard(bandPairs(minhashBandsFrom(minhashSigs(sh))), sh, sizes)
   }
 
   /** Shared CTE prefix (shingles → hashed shingles → signatures →
@@ -487,42 +494,36 @@ $exactJaccardSql"""
   // DECIMAL(18,9)-quantized per-pair Jaccard sum (small-magnitude,
   // L117 discipline). Scale = L3's banding; the signature compare adds
   // one 24-column pair join on the ALREADY-REDUCED candidate frame.
-  def minhashCalibration(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
+  def minhashCalibration(documents: DataFrame): DataFrame =
+    calibrationBuckets(documents)(_ === _)
+      .select(col("bucket"), col("n_pairs"), col("sum_eq"),
+        expr(s"(sum_eq * 1000000L) div (n_pairs * $NumHashes)").as("est_mean_ppm"),
+        col("exact_mean"))
+
+  /** The L129 / L134 calibration core: L3's banded candidates, scored
+    * with their exact common/union counts, then per decile bucket
+    * (bucket, n_pairs, sum_eq, exact_mean), where sum_eq counts the
+    * signature components for which `agree` holds. */
+  private def calibrationBuckets(documents: DataFrame)(
+      agree: (Column, Column) => Column): DataFrame = {
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val based = sh.select(col("doc_id"), col("s").bitwiseAND(0xFFFFFFFFL).as("base"))
-    val sigs = based.groupBy(col("doc_id")).agg(
-      min(col("base").bitwiseXOR(mixC(0)) * mixA(0)).as("h0"),
-      (1 until NumHashes).map(j =>
-        min(col("base").bitwiseXOR(mixC(j)) * mixA(j)).as(s"h$j")): _*)
-    val withBands = minhashBandsFrom(sh)
-    val cands = withBands.select(col("band"), col("key"), col("doc_id").as("x"))
-      .join(withBands.select(col("band"), col("key"), col("doc_id").as("y")), Seq("band", "key"))
-      .where(col("x") < col("y"))
-      .select(col("x"), col("y")).distinct()
-    val shx = sh.select(col("doc_id").as("x"), col("s"))
-    val shy = sh.select(col("doc_id").as("y"), col("s"))
-    val scored = cands
-      .join(shx, "x").join(shy, Seq("y", "s"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("doc_id").as("x"), col("n").as("nx")), "x")
-      .join(sizes.select(col("doc_id").as("y"), col("n").as("ny")), "y")
-      .withColumn("union_n", col("nx") + col("ny") - col("common"))
+    val sigs = minhashSigs(sh)
     val sx = sigs.toDF("x" +: (0 until NumHashes).map(j => s"x$j"): _*)
     val sy = sigs.toDF("y" +: (0 until NumHashes).map(j => s"y$j"): _*)
     val eq = (0 until NumHashes)
-      .map(j => (col(s"x$j") === col(s"y$j")).cast("long")).reduce(_ + _)
-    scored.join(sx, "x").join(sy, "y")
+      .map(j => agree(col(s"x$j"), col(s"y$j")).cast("long")).reduce(_ + _)
+    commonCounts(bandPairs(minhashBandsFrom(sigs)), sh, sizes)
+      .withColumn("union_n", col("nx") + col("ny") - col("common"))
+      .join(sx, "x").join(sy, "y")
       .withColumn("eq", eq)
       .withColumn("bucket", least(expr("(10 * common) div union_n"), lit(9L)))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("eq")).as("sum_eq"),
         sum((col("common").cast("double") / col("union_n").cast("double"))
           .cast("decimal(18,9)")).as("jac_sum"))
-      .select(col("bucket"), col("n_pairs"), col("sum_eq"),
-        expr(s"(sum_eq * 1000000L) div (n_pairs * $NumHashes)").as("est_mean_ppm"),
-        round(col("jac_sum").cast("double") / col("n_pairs").cast("double"), 6)
-          .as("exact_mean"))
+      .withColumn("exact_mean",
+        round(col("jac_sum").cast("double") / col("n_pairs").cast("double"), 6))
   }
 
   lazy val minhashCalibrationSql: String = {
@@ -572,9 +573,9 @@ FROM scored GROUP BY 1"""
   // candidate verify join, whose volume is bounded by band
   // collisions, not the corpus square.
   def minhashContamination(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val bands = minhashBandsFrom(sh)
+    val bands = minhashBandsFrom(minhashSigs(sh))
     val bench = bands.where(col("doc_id") % 50 === 0)
       .select(col("band"), col("key"), col("doc_id").as("y"))
     val cands = bands.where(col("doc_id") % 50 =!= 0)
@@ -627,9 +628,9 @@ FROM scored GROUP BY 1"""
       .join(documents.where(!newPred).select(md5(col("text")).as("h")).distinct(),
         Seq("h"), "left_semi")
       .select(col("doc_id"), lit(1L).as("exact_dup"))
-    val sh = shingleHashedDf(documents).cache()
+    val sh = shingleHashedDf(documents)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val bands = minhashBandsFrom(sh)
+    val bands = minhashBandsFrom(minhashSigs(sh))
     val cands = bands.where(col("doc_id") % 5 === 4)
       .select(col("band"), col("key"), col("doc_id").as("x"))
       .join(bands.where(col("doc_id") % 5 =!= 4)
@@ -1345,12 +1346,12 @@ FROM marked GROUP BY doc_id"""
   }
 
   def simhashDedup(documents: DataFrame): DataFrame = {
-    // cache() pins one (doc_id, long) row per doc — the narrow sig
-    // frame, never the text — because it feeds both sides of the band
-    // self-join. At 100 TB even that is a corpus-sized intermediate:
-    // if it exceeds cluster cache, checkpoint the sigs to parquet and
-    // read twice (recompute = one extra map-only pass) instead.
-    val sims = simhashes(documents).cache()
+    // materialized once: the narrow (doc_id, long) sig frame, never the
+    // text, feeds both sides of the band self-join. At 100 TB even that
+    // is a corpus-sized intermediate: if it exceeds executor storage,
+    // checkpoint the sigs to parquet and read twice (recompute = one
+    // extra map-only pass) instead.
+    val sims = simhashes(documents).localCheckpoint(eager = false)
     val withBands = sims.select(col("doc_id"), col("simhash"),
       explode(array((0 until SimBands).map(b => struct(lit(b).as("band"),
         shiftright(col("simhash"), b * SimBandBits)
@@ -1572,16 +1573,16 @@ FROM spans GROUP BY doc_id"""
 
   def kmvOverlap(documents: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(documents.sparkSession)
-    // r13 (guide §5): cached — the shingle-explode + double distinct
-    // corpus pass has THREE consumers below (the per-source sketch and
-    // both sides of the exact-truth join); without it the subtree
-    // re-evaluates per consumer (the minhashLsh `sh` precedent)
+    // materialized once: the shingle-explode + double distinct corpus
+    // pass has THREE consumers below (the per-source sketch and both
+    // sides of the exact-truth join); without it the subtree
+    // re-evaluates per consumer (the shingleHashedDf precedent)
     val g = documents.select(col("source"),
         explode(expr("graft_shingles(split(lower(text), '\\\\s+'), 3)")).as("s"))
       .distinct()
       .select(col("source"), md5Long(lit("kmv"), col("s")).as("h"))
       .distinct()
-      .cache()
+      .localCheckpoint(eager = false)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("h"))
     val sk = g.withColumn("rn", row_number().over(w)).where(col("rn") <= KmvK)
@@ -1987,47 +1988,13 @@ GROUP BY source"""
   // Spark div and DuckDB // both truncate toward zero, the documented
   // pairing); exact means via the L129 DECIMAL(18,9) quantization.
   // Scale = L3's banding; the pair join compares 24 two-bit residues.
-  def bbitMinhashCalibration(documents: DataFrame): DataFrame = {
-    val sh = shingleHashedDf(documents).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val based = sh.select(col("doc_id"), col("s").bitwiseAND(0xFFFFFFFFL).as("base"))
-    val sigs = based.groupBy(col("doc_id")).agg(
-      min(col("base").bitwiseXOR(mixC(0)) * mixA(0)).as("h0"),
-      (1 until NumHashes).map(j =>
-        min(col("base").bitwiseXOR(mixC(j)) * mixA(j)).as(s"h$j")): _*)
-    val withBands = minhashBandsFrom(sh)
-    val cands = withBands.select(col("band"), col("key"), col("doc_id").as("x"))
-      .join(withBands.select(col("band"), col("key"), col("doc_id").as("y")),
-        Seq("band", "key"))
-      .where(col("x") < col("y"))
-      .select(col("x"), col("y")).distinct()
-    val shx = sh.select(col("doc_id").as("x"), col("s"))
-    val shy = sh.select(col("doc_id").as("y"), col("s"))
-    val scored = cands
-      .join(shx, "x").join(shy, Seq("y", "s"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("doc_id").as("x"), col("n").as("nx")), "x")
-      .join(sizes.select(col("doc_id").as("y"), col("n").as("ny")), "y")
-      .withColumn("union_n", col("nx") + col("ny") - col("common"))
-    val sx = sigs.toDF("x" +: (0 until NumHashes).map(j => s"x$j"): _*)
-    val sy = sigs.toDF("y" +: (0 until NumHashes).map(j => s"y$j"): _*)
-    val eq2 = (0 until NumHashes)
-      .map(j => (pmod(col(s"x$j"), lit(4L)) === pmod(col(s"y$j"), lit(4L)))
-        .cast("long")).reduce(_ + _)
-    scored.join(sx, "x").join(sy, "y")
-      .withColumn("eq2", eq2)
-      .withColumn("bucket", least(expr("(10 * common) div union_n"), lit(9L)))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("eq2")).as("sum_eq2"),
-        sum((col("common").cast("double") / col("union_n").cast("double"))
-          .cast("decimal(18,9)")).as("jac_sum"))
-      .select(col("bucket"), col("n_pairs"), col("sum_eq2"),
-        expr(s"(sum_eq2 * 1000000L) div (n_pairs * $NumHashes)").as("raw2_ppm"),
-        expr(s"((4 * sum_eq2 - n_pairs * $NumHashes) * 1000000L) div (3 * n_pairs * $NumHashes)")
+  def bbitMinhashCalibration(documents: DataFrame): DataFrame =
+    calibrationBuckets(documents)((x, y) => pmod(x, lit(4L)) === pmod(y, lit(4L)))
+      .select(col("bucket"), col("n_pairs"), col("sum_eq").as("sum_eq2"),
+        expr(s"(sum_eq * 1000000L) div (n_pairs * $NumHashes)").as("raw2_ppm"),
+        expr(s"((4 * sum_eq - n_pairs * $NumHashes) * 1000000L) div (3 * n_pairs * $NumHashes)")
           .as("est2_ppm"),
-        round(col("jac_sum").cast("double") / col("n_pairs").cast("double"), 6)
-          .as("exact_mean"))
-  }
+        col("exact_mean"))
 
   lazy val bbitMinhashCalibrationSql: String = {
     val eq2Sql = (0 until NumHashes)

@@ -1382,7 +1382,9 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
         rows.foreach { case (_, xi, _) =>
           kmDistLocal(xi, cents).foreach { case (_, c) =>
             var i = 0
-            while (i < xi.length) { sums(c)(i) += xi(i); i += 1 }
+            // checked like the distributed rounds' ANSI sum: an
+            // overflowing center throws on both sides
+            while (i < xi.length) { sums(c)(i) = Math.addExact(sums(c)(i), xi(i)); i += 1 }
             ns(c) += 1
           }
         }

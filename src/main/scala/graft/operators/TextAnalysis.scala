@@ -1135,7 +1135,9 @@ FROM f ORDER BY rrf DESC, doc_id LIMIT $RrfTopK"""
   def tfidf(documents: DataFrame): DataFrame = {
     val toks = documents.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .where(length(col("token")) > 0)
-    val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf")).cache()
+    // materialized once: tf is read twice, by the score join and by df
+    val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
+      .localCheckpoint(eager = false)
     val docCount = documents.select(count(lit(1)).as("n_docs"))
     // df derives from tf (one row per (doc, token)) — no second pass
     // over the raw token stream
@@ -1412,12 +1414,12 @@ FROM g"""
   private val MossMinShared = 3L
 
   def fingerprintPairs(documents: DataFrame): DataFrame = {
-    // r13 (guide §5): cached — the winnowing pass (CPU-dense per-byte
-    // k-gram rolling hash) has FOUR consumers in this plan (the df
-    // histogram + the indexed side, each twice through the self-join)
-    // and exchange reuse does not fire across their differing
-    // projections; the frame is the narrow (doc_id, fp) stream
-    val fps = fingerprint(documents).cache()
+    // materialized once: the winnowing pass (CPU-dense per-byte k-gram
+    // rolling hash) has FOUR consumers in this plan (the df histogram +
+    // the indexed side, each twice through the self-join) and exchange
+    // reuse does not fire across their differing projections; the
+    // frame is the narrow (doc_id, fp) stream
+    val fps = fingerprint(documents).localCheckpoint(eager = false)
     val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") <= MossMaxDf).select(col("fp"))
     val idx = fps.join(rare, "fp")

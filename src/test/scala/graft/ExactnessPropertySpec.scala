@@ -594,6 +594,24 @@ class ExactnessPropertySpec extends SparkSpec {
         .orderBy("rk").collect().toSeq
       assert(kcL == kcD, s"kcenter diverged (trial $t):\n$kcL\nvs\n$kcD")
     }
+    // near-identical vectors around 1e12: each scaled coordinate is
+    // ~1e18, so a center's coordinate sum overflows Long once 10 points
+    // share it (80 points, 8 centers: one center has >= 10), while the
+    // point-to-center distances stay small. With one update round
+    // (iters = 2) that round is the last one kmeansAssign runs before
+    // it returns, so both paths must throw there, not hand a wrapped
+    // center to the final assignment.
+    val huge = (1L to 80L).map(id =>
+        (id, Seq.tabulate(4)(i => 1e12 + (id * (i + 1)) % 7 * 0.25)))
+      .toDF("vec_id", "embedding")
+    def overflows(budget: Long): Boolean =
+      try { Similarity.kmeansAssign(huge, iters = 2, localRowBudget = budget); false }
+      catch {
+        case e: Exception => Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+      }
+    assert(overflows(Long.MaxValue), "local k-means wrapped an overflowing center sum")
+    assert(overflows(-1L), "distributed k-means wrapped an overflowing center sum")
   }
 
   test("driver replay takes exactly budget rows locally and budget + 1 distributed") {
