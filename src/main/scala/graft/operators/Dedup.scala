@@ -901,8 +901,10 @@ FROM base CROSS JOIN ne CROSS JOIN tri"""
   // same recurrence) hash-checks it. Per round: one (src) join + one
   // (dst) aggregate; lineage cut per round exactly like CC. Vertices
   // are the edge list's endpoints (singletons have no rank flow).
-  private val PrIters = 10
-  private val PrUnit = 1000000000000L // 1e-12 rank units
+  // TextRank (L157) and host rank (L72) run the same recurrence over
+  // weighted edges: [[integerRank]].
+  private[graft] val RankIters = 10
+  private[graft] val RankUnit = 1000000000000L // 1e-12 rank units
 
   // ---- C49 (r7): k-core membership by iterative peeling ----
   // The fourth graph primitive (CC finds components, triangles count
@@ -1005,62 +1007,102 @@ SELECT v AS doc_id, count(*) AS core_deg FROM (
     pageRankEdges(simhashDedup(documents).select(col("x"), col("y")))
 
   /** The PR recurrence over an explicit canonical (x, y) pair list —
-    * split out for the local/distributed parity spec. */
+    * split out for the local/distributed parity spec. Undirected: both
+    * directions, each of weight 1, so out_w is the degree. */
   private[graft] def pageRankEdges(e: DataFrame,
+      localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame =
+    integerRank(e.unionAll(e.select(col("y"), col("x")))
+        .select(col("x").as("src"), col("y").as("dst"), lit(1L).as("w")),
+      scaleFirst = false, localEdgeBudget = localEdgeBudget)
+      .select(col("v").as("doc_id"), col("rank"))
+
+  /** (v, out_w, rank) for every source vertex of a directed weighted
+    * edge frame (src, dst, w): the integer rank recurrence of PageRank,
+    * TextRank and host rank. Each source starts at RankUnit div n and
+    * sends its rank along its out-edges in proportion w / out_w;
+    * rank'(v) = teleport + (85·Σ inflow) div 100 for RankIters rounds,
+    * teleport = (15·(RankUnit div n)) div 100. n is `vertices` when
+    * given (host rank's fixed host count), else the distinct sources.
+    * The one difference between callers is the rounding order of an
+    * edge's share: `scaleFirst` computes (rank·w) div out_w exactly
+    * (rank·w may pass BIGINT: BigInteger on the driver, decDiv on
+    * decimal(38,0) distributed); otherwise (rank div out_w)·w, which
+    * never exceeds rank. With w = 1 the two agree.
+    *
+    * r13 driver replay (DriverReplay): the recurrence is integer
+    * fixed-point BY DESIGN (portability), so a sub-budget edge frame
+    * replays operation-for-operation (Long `/` on non-negatives ≡
+    * Spark `div` ≡ DuckDB `//`) instead of paying RankIters
+    * eager-checkpoint job waves. An empty graph (n = 0) has no ranks
+    * on either side. */
+  private[graft] def integerRank(edges: DataFrame, scaleFirst: Boolean,
+      vertices: Option[Long] = None,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    // undirected: both directions; deg = out-degree in the directed view
-    val edges = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
-      .select(col("x").as("src"), col("y").as("dst")).localCheckpoint()
-    // r13 driver replay (DriverReplay): the recurrence is integer
-    // fixed-point BY DESIGN (portability), so a sub-budget edge frame
-    // replays operation-for-operation (Long `/` on non-negatives ≡
-    // Spark `div` ≡ DuckDB `//`) instead of paying PrIters
-    // eager-checkpoint job waves.
-    DriverReplay.collectWithin(edges.as[(Long, Long)], localEdgeBudget) match {
-      case Some(es) =>
-        val deg = new java.util.HashMap[Long, Long]()
-        es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-        val n = deg.size.toLong
-        if (n == 0) return Seq.empty[(Long, Long)].toDF("doc_id", "rank")
-        val teleport = (15L * (PrUnit / n)) / 100L
-        var ranks = new java.util.HashMap[Long, Long]()
-        deg.keySet().forEach(v => ranks.put(v, PrUnit / n))
-        for (_ <- 1 to PrIters) {
-          val inflow = new java.util.HashMap[Long, Long]()
+    import java.math.BigInteger
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = edges.sparkSession
+    val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
+    val schema = StructType(Seq(e.schema("src").copy(name = "v"),
+      StructField("out_w", LongType), StructField("rank", LongType)))
+    // out_w per source: a driver map beside the collected edges on the
+    // replay side, a frame on the distributed one (built only there)
+    val replay = DriverReplay.collectWithin(e, localEdgeBudget).map { es =>
+      val ow = new java.util.LinkedHashMap[Any, Long]()
+      es.foreach(r => ow.merge(r.get(0), r.getLong(2), _ + _))
+      (es, ow)
+    }
+    lazy val deg = e.groupBy(col("src").as("v")).agg(sum(col("w")).as("out_w"))
+      .localCheckpoint()
+    val n = vertices.getOrElse(replay.fold(deg.count())(_._2.size.toLong))
+    if (n == 0) return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+    val teleport = (15L * (RankUnit / n)) / 100L
+    replay match {
+      case Some((es, ow)) =>
+        def share(rank: Long, w: Long, out: Long): Long =
+          if (scaleFirst) BigInteger.valueOf(rank).multiply(BigInteger.valueOf(w))
+            .divide(BigInteger.valueOf(out)).longValueExact()
+          else (rank / out) * w
+        var ranks = new java.util.HashMap[Any, Long]()
+        ow.keySet().forEach(v => ranks.put(v, RankUnit / n))
+        for (_ <- 1 to RankIters) {
+          val inflow = new java.util.HashMap[Any, Long]()
           val r = ranks
-          es.foreach { case (src, dst) =>
-            inflow.merge(dst, r.get(src) / deg.get(src), _ + _)
+          es.foreach { row =>
+            val src = row.get(0)
+            inflow.merge(row.get(1), share(r.get(src), row.getLong(2), ow.get(src)), _ + _)
           }
-          val next = new java.util.HashMap[Long, Long]()
-          deg.keySet().forEach(v =>
+          val next = new java.util.HashMap[Any, Long]()
+          ow.keySet().forEach(v =>
             next.put(v, teleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
           ranks = next
         }
-        val rows = deg.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-          .map(v => (v, ranks.get(v))).toSeq
-        return rows.toDF("doc_id", "rank")
+        val rows = new java.util.ArrayList[Row]()
+        ow.forEach((v, w) => rows.add(Row(v, w, ranks.get(v))))
+        spark.createDataFrame(rows, schema)
       case None =>
+        // `div`, not `/`: Column./ is double division, and the whole
+        // point is integer truncation identical to DuckDB's `//`. The
+        // truncate-first quotient q is projected per vertex, before
+        // the edge join; column pruning drops what `share` leaves
+        // unread.
+        val share =
+          if (scaleFirst) decDiv(col("rank").cast("decimal(38,0)") * col("w"),
+            col("out_w").cast("decimal(38,0)")).cast("long")
+          else col("q") * col("w")
+        var ranks = deg.select(col("v"), col("out_w"), lit(RankUnit / n).as("rank"))
+        for (_ <- 1 to RankIters) {
+          val bySrc = ranks.select(col("v").as("src"), col("rank"), col("out_w"),
+            expr("rank div out_w").as("q"))
+          val inflow = e.join(bySrc, "src")
+            .groupBy(col("dst").as("v")).agg(sum(share).as("in_sum"))
+          ranks = deg.join(inflow, Seq("v"), "left")
+            .select(col("v"), col("out_w"),
+              (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
+            .localCheckpoint() // cut lineage per round, the CC rule
+        }
+        ranks
     }
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
-    val n = deg.count()
-    val teleport = (15L * (PrUnit / n)) / 100L
-    var ranks = deg.select(col("src").as("v"), lit(PrUnit / n).as("rank"))
-    for (_ <- 1 to PrIters) {
-      // `div`, not `/`: Column./ is double division, and the whole
-      // point is integer truncation identical to DuckDB's `//`
-      val contrib = ranks.join(deg.withColumnRenamed("src", "v"), "v")
-        .select(col("v"), expr("rank div deg").as("c"))
-      val inflow = edges.join(contrib.withColumnRenamed("v", "src"), "src")
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-      ranks = deg.select(col("src").as("v"))
-        .join(inflow.withColumnRenamed("dst", "v"), Seq("v"), "left")
-        .select(col("v"),
-          (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
-        .localCheckpoint() // cut lineage per round, the CC rule
-    }
-    ranks.select(col("v").as("doc_id"), col("rank"))
   }
 
   // every vertex of the undirected edge list has >= 1 in-edge, so the
@@ -1072,17 +1114,17 @@ e AS (SELECT x AS src, y AS dst FROM pairs UNION ALL SELECT y, x FROM pairs),
 deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
 n AS (SELECT count(*) AS n FROM deg),
 pr(iter, v, rank) AS (
-  SELECT 0, src, $PrUnit // (SELECT n FROM n) FROM deg
+  SELECT 0, src, $RankUnit // (SELECT n FROM n) FROM deg
   UNION ALL
   SELECT iter + 1, dst,
-    (15 * ($PrUnit // (SELECT n FROM n))) // 100 + (85 * sum_contrib) // 100
+    (15 * ($RankUnit // (SELECT n FROM n))) // 100 + (85 * sum_contrib) // 100
   FROM (
     SELECT p.iter AS iter, e.dst AS dst, sum(p.rank // dg.deg) AS sum_contrib
     FROM pr p JOIN deg dg ON dg.src = p.v JOIN e ON e.src = p.v
     GROUP BY p.iter, e.dst)
-  WHERE iter < $PrIters
+  WHERE iter < $RankIters
 )
-SELECT v AS doc_id, rank::BIGINT AS rank FROM pr WHERE iter = $PrIters"""
+SELECT v AS doc_id, rank::BIGINT AS rank FROM pr WHERE iter = $RankIters"""
 
   // ---- L19: dedup clustering (connected components over dup pairs) ----
   // A pair list (from any generator — minhash here) is only half of a

@@ -2,9 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-/** The size rule every size-adaptive operator follows (CC, PageRank,
-  * k-core, LPA, HITS, TextRank, host rank, k-means, k-center): a
-  * fixpoint whose input fits a budget is collected once and replayed
+/** The size rule every size-adaptive operator follows — nine
+  * operators, seven distinct recurrences: CC; integer rank, which
+  * PageRank, TextRank and host rank share in `Dedup.integerRank`;
+  * k-core; LPA; HITS; k-means; k-center. A fixpoint whose input fits
+  * a budget is collected once and replayed
   * on the driver; above the budget the distributed loop runs
   * unchanged. Both sides return identical rows — the recurrences are
   * integer-exact by design, and parity specs force each side. This is

@@ -258,15 +258,12 @@ FROM e"""
   // three md5-derived links. Scale shape: link extraction is map-only
   // over the corpus; ONE (src, dst) aggregate with map-side partials
   // collapses 100 TB of pages to a host-cardinality edge list; the
-  // iteration then runs on host-sized frames (lineage-cut per wave —
-  // the C39 rule). Integer portability: contribution =
+  // iteration then runs on host-sized frames (Dedup.integerRank, the
+  // C39 recurrence). Integer portability: contribution =
   // (rank div out_w)·w — truncate-then-scale, so every intermediate is
   // ≤ rank and BIGINT overflow is impossible by construction; teleport
   // and damping are the C39 constants.
   private val HostCount = 16L
-  private val HrUnit = 1000000000000L
-  private val HrIters = 10
-  private val HrTeleport = (15L * (HrUnit / HostCount)) / 100L
 
   private def hostCol(id: Column): Column =
     concat(lit("h"), pmod(id, lit(HostCount)).cast("string"))
@@ -306,52 +303,9 @@ FROM e"""
         lit("<a href=\"https://(h[0-9]+)\\.example\\.com"), lit(1)).as("dsts"))
     val edges = parsed.select(col("src"), explode(col("dsts")).as("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
-    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-      .localCheckpoint()
-    // r13 driver replay (DriverReplay): integer fixed-point recurrence
-    // over the HOST graph (bounded by HostCount at any corpus size).
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val ranksFinal: DataFrame =
-      DriverReplay.collectWithin(edges.as[(String, String, Long)],
-          DriverReplay.GraphEdgeBudget).map { es =>
-        val outW = new java.util.HashMap[String, Long]()
-        es.foreach { case (src, _, w) => outW.merge(src, w, _ + _) }
-        var ranks = new java.util.HashMap[String, Long]()
-        outW.keySet().forEach(v => ranks.put(v, HrUnit / HostCount))
-        for (_ <- 1 to HrIters) {
-          val inflow = new java.util.HashMap[String, Long]()
-          val r = ranks
-          es.foreach { case (src, dst, w) =>
-            inflow.merge(dst, (r.get(src) / outW.get(src)) * w, _ + _)
-          }
-          val next = new java.util.HashMap[String, Long]()
-          outW.keySet().forEach(v =>
-            next.put(v, HrTeleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
-          ranks = next
-        }
-        val rows = outW.keySet().toArray.map(_.asInstanceOf[String]).sorted
-          .map(v => (v, ranks.get(v))).toSeq
-        rows.toDF("v", "rank")
-      }.getOrElse {
-        var ranks = deg.select(col("src").as("v"), lit(HrUnit / HostCount).as("rank"))
-        for (_ <- 1 to HrIters) {
-          val contrib = ranks.join(deg.withColumnRenamed("src", "v"), "v")
-            .select(col("v"), expr("rank div out_w").as("c"))
-          val inflow = edges.join(contrib.withColumnRenamed("v", "src"), "src")
-            .groupBy(col("dst")).agg(sum(expr("c * w")).as("in_sum"))
-          ranks = deg.select(col("src").as("v"))
-            .join(inflow.withColumnRenamed("dst", "v"), Seq("v"), "left")
-            .select(col("v"),
-              (lit(HrTeleport) + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
-            .localCheckpoint()
-        }
-        ranks
-      }
-    ranksFinal.select(col("v").as("host"), col("rank"))
-      .join(deg.select(col("src").as("host"), col("out_w")), "host")
-      .select(col("host"), col("out_w"), col("rank"))
+    // the host graph is bounded by HostCount at any corpus size
+    Dedup.integerRank(edges, scaleFirst = false, vertices = Some(HostCount))
+      .select(col("v").as("host"), col("out_w"), col("rank"))
   }
 
   /** Generator-arithmetic oracle (the L42/L50 pattern): hrefs are
@@ -368,14 +322,14 @@ FROM e"""
 e AS (SELECT src, dst, count(*)::BIGINT AS w FROM raw GROUP BY 1, 2),
 deg AS (SELECT src, sum(w)::BIGINT AS out_w FROM e GROUP BY src),
 pr(iter, v, rank) AS (
-  SELECT 0, src, ${HrUnit / HostCount} FROM deg
+  SELECT 0, src, ${Dedup.RankUnit / HostCount} FROM deg
   UNION ALL
-  SELECT iter + 1, dst, $HrTeleport + (85 * s) // 100
+  SELECT iter + 1, dst, ${(15L * (Dedup.RankUnit / HostCount)) / 100L} + (85 * s) // 100
   FROM (SELECT p.iter AS iter, e.dst AS dst, sum((p.rank // dg.out_w) * e.w) AS s
         FROM pr p JOIN deg dg ON dg.src = p.v JOIN e ON e.src = p.v
         GROUP BY p.iter, e.dst)
-  WHERE iter < $HrIters)
+  WHERE iter < ${Dedup.RankIters})
 SELECT p.v AS host, deg.out_w, p.rank::BIGINT AS rank
-FROM pr p JOIN deg ON deg.src = p.v WHERE iter = $HrIters"""
+FROM pr p JOIN deg ON deg.src = p.v WHERE iter = ${Dedup.RankIters}"""
   }
 }

@@ -3476,16 +3476,13 @@ FROM scored ORDER BY score_ppm DESC, phrase ASC LIMIT $RakeTopK"""
   // bounded), damping 85/100 in integer division, 10 iterations
   // bit-identical in both engines, oracle = the same recurrence as a
   // recursive CTE. Top-20 released under a (rank DESC, word ASC)
-  // total order. Plan: one fused posexplode pass → edge aggregate
-  // (checkpointed); each round is one join + one aggregate on the
+  // total order. Plan: one fused posexplode pass → edge aggregate;
+  // the rounds are Dedup.integerRank's, with the exact share, on the
   // vocabulary-bounded graph.
-  private val TrIters = 10
-  private val TrUnit = 1000000000000L
   private val TrTopK = 20
 
   def textRank(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d38 = "decimal(38,0)"
     val toks = documents
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
       .where(length(col("tok")) > 0 &&
@@ -3496,60 +3493,10 @@ FROM scored ORDER BY score_ppm DESC, phrase ASC LIMIT $RakeTopK"""
       .select(least(col("tok"), col("nxt")).as("x"),
         greatest(col("tok"), col("nxt")).as("y"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("wt"))
-    val edges = adj.select(col("x").as("src"), col("y").as("dst"), col("wt"))
-      .unionAll(adj.select(col("y").as("src"), col("x").as("dst"), col("wt")))
-      .localCheckpoint()
-    val strength = edges.groupBy(col("src")).agg(sum(col("wt")).as("s"))
-      .localCheckpoint()
-    val n = strength.count()
-    val teleport = (15L * (TrUnit / n)) / 100L
-    // r13 driver replay (DriverReplay): integer fixed-point recurrence
-    // (decDiv on non-negatives ≡ BigInteger divide).
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val ranksFinal: DataFrame =
-      DriverReplay.collectWithin(edges.as[(String, String, Long)],
-          DriverReplay.GraphEdgeBudget).map { es =>
-        val s = new java.util.HashMap[String, Long]()
-        es.foreach { case (src, _, wt) => s.merge(src, wt, _ + _) }
-        var ranks = new java.util.HashMap[String, Long]()
-        s.keySet().forEach(v => ranks.put(v, TrUnit / n))
-        for (_ <- 1 to TrIters) {
-          val inflow = new java.util.HashMap[String, Long]()
-          val r = ranks
-          es.foreach { case (src, dst, wt) =>
-            val c = (java.math.BigInteger.valueOf(r.get(src))
-              .multiply(java.math.BigInteger.valueOf(wt))
-              .divide(java.math.BigInteger.valueOf(s.get(src)))).longValueExact()
-            inflow.merge(dst, c, _ + _)
-          }
-          val next = new java.util.HashMap[String, Long]()
-          s.keySet().forEach(v =>
-            next.put(v, teleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
-          ranks = next
-        }
-        val rows = s.keySet().toArray.map(_.asInstanceOf[String]).sorted
-          .map(v => (v, ranks.get(v))).toSeq
-        rows.toDF("v", "rank")
-      }.getOrElse {
-        var ranks = strength.select(col("src").as("v"), lit(TrUnit / n).as("rank"))
-        for (_ <- 1 to TrIters) {
-          val contrib = ranks
-            .join(strength.withColumnRenamed("src", "v"), "v")
-            .join(edges.withColumnRenamed("src", "v"), "v")
-            .select(col("dst"), graft.functions.Portable.decDiv(
-              col("rank").cast(d38) * col("wt"), col("s").cast(d38))
-              .cast("long").as("c"))
-          val inflow = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-          ranks = strength.select(col("src").as("v"))
-            .join(inflow.withColumnRenamed("dst", "v"), Seq("v"), "left")
-            .select(col("v"),
-              (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) div 100"))
-                .as("rank"))
-            .localCheckpoint()
-        }
-        ranks
-      }
+    val ranksFinal = Dedup.integerRank(
+      adj.select(col("x").as("src"), col("y").as("dst"), col("wt").as("w"))
+        .unionAll(adj.select(col("y"), col("x"), col("wt"))),
+      scaleFirst = true)
     // r11: top-k via TakeOrderedAndProject (the RAKE/hill shape) —
     // the re-rank window orders only the ≤ k selected rows
     ranksFinal.orderBy(col("rank").desc, col("v").asc).limit(TrTopK)
@@ -3578,19 +3525,19 @@ e AS (SELECT x AS src, y AS dst, wt FROM adj
 s AS (SELECT src, sum(wt)::BIGINT AS s FROM e GROUP BY src),
 n AS (SELECT count(*) AS n FROM s),
 tr(iter, v, rank) AS (
-  SELECT 0, src, $TrUnit // (SELECT n FROM n) FROM s
+  SELECT 0, src, ${Dedup.RankUnit} // (SELECT n FROM n) FROM s
   UNION ALL
   SELECT iter + 1, dst,
-    (15 * ($TrUnit // (SELECT n FROM n))) // 100 + (85 * sumc) // 100
+    (15 * (${Dedup.RankUnit} // (SELECT n FROM n))) // 100 + (85 * sumc) // 100
   FROM (
     SELECT p.iter AS iter, e.dst AS dst,
       sum((p.rank::HUGEINT * e.wt) // st.s)::BIGINT AS sumc
     FROM tr p JOIN s st ON st.src = p.v JOIN e ON e.src = p.v
     GROUP BY p.iter, e.dst)
-  WHERE iter < $TrIters)
+  WHERE iter < ${Dedup.RankIters})
 SELECT row_number() OVER (ORDER BY rank DESC, v ASC)::BIGINT AS rk,
   v AS word, rank::BIGINT AS rank
-FROM tr WHERE iter = $TrIters
+FROM tr WHERE iter = ${Dedup.RankIters}
 ORDER BY rank DESC, v ASC LIMIT $TrTopK"""
   }
 

@@ -170,7 +170,7 @@ class ExactnessPropertySpec extends SparkSpec {
     }
   }
 
-  test("graph recurrences: local driver replay equals the distributed waves (PR/kCore/LPA/HITS/TextRank-style)") {
+  test("graph recurrences: local driver replay equals the distributed waves (integer rank on Long and String keys, both shares, fixed n, BIGINT-passing rank*w, empty graph; kCore/LPA/HITS)") {
     // r13: the size-adaptive local path extends from CC to the other
     // integer fixed-point graph recurrences; each must replay its
     // distributed loop operation-for-operation. Random graphs with
@@ -220,6 +220,42 @@ class ExactnessPropertySpec extends SparkSpec {
     val b = graft.operators.Dedup.kCoreEdges(chain, localEdgeBudget = 0L)
       .orderBy("v").collect().toSeq
     assert(a == b, "kCore chain diverged")
+    // the shared integer rank (PageRank, TextRank, host rank) on
+    // directed String-keyed weighted graphs: sinks, sources without
+    // in-edges, weights above 1, under both rounding orders of a share
+    def rank(edges: Seq[(String, String, Long)], scaleFirst: Boolean,
+        vertices: Option[Long], budget: Long) =
+      Dedup.integerRank(edges.toDF("src", "dst", "w"), scaleFirst, vertices, budget)
+        .orderBy("v").collect().toSeq
+    def sides(edges: Seq[(String, String, Long)], scaleFirst: Boolean,
+        vertices: Option[Long], tag: String, distBudget: Long = 0L) = {
+      val l = rank(edges, scaleFirst, vertices, Long.MaxValue)
+      val d = rank(edges, scaleFirst, vertices, distBudget)
+      assert(l == d, s"integer rank diverged ($tag, scaleFirst = $scaleFirst):\n$l\nvs\n$d")
+      l
+    }
+    (1 to 3).foreach { t =>
+      val edges = (1 to 40 + rnd.nextInt(60))
+        .map(_ => (s"w${rnd.nextInt(25)}", s"w${rnd.nextInt(25)}"))
+        .filter { case (a, b) => a != b }.distinct
+        .map { case (a, b) => (a, b, 1L + rnd.nextInt(9)) }
+      Seq(true, false).foreach { sf =>
+        val got = sides(edges, sf, None, s"random directed $t")
+        assert(got.nonEmpty && got.map(_.getLong(2)).sum > 0L)
+      }
+      // a fixed vertex count (host rank's n) instead of the distinct sources
+      sides(edges, scaleFirst = false, Some(40L), s"random directed $t, n = 40")
+    }
+    // rank·w passes BIGINT (1e12 / 3 · 1e9 > 2^63): the exact share
+    // runs through BigInteger on the driver and decimal(38,0) distributed
+    val big = Seq(("a", "b", 1000000000L), ("a", "c", 3L), ("b", "a", 2L),
+      ("c", "a", 1L), ("c", "b", 5L))
+    assert(BigInt(Dedup.RankUnit / 3) * 1000000000L > BigInt(Long.MaxValue))
+    Seq(true, false).foreach(sf => sides(big, sf, None, "BIGINT-passing rank*w"))
+    // the empty graph has no ranks on either side (n = 0); -1 forces
+    // the distributed side even on no rows
+    Seq(true, false).foreach(sf =>
+      assert(sides(Seq.empty, sf, None, "empty graph", distBudget = -1L).isEmpty))
   }
 
   test("BootWeights digest-direct equals the md5-hex + conv + threshold chain") {
@@ -594,6 +630,31 @@ class ExactnessPropertySpec extends SparkSpec {
         .orderBy("rk").collect().toSeq
       assert(kcL == kcD, s"kcenter diverged (trial $t):\n$kcL\nvs\n$kcD")
     }
+    // null-holed seeds: every k-means seed and k-center's first pick
+    // (the smallest md5 draws) has a null coordinate, as do half the
+    // rest. Both sides read a seed's null as 0 and never assign the
+    // holed row itself.
+    val ids = (1L to 40L).toDF("vec_id")
+    def drawn(seed: String, k: Int): Set[Long] =
+      ids.orderBy(graft.functions.Portable.md5Long(lit(seed), col("vec_id")), col("vec_id"))
+        .limit(k).as[Long].collect().toSet
+    val holedIds = drawn("km", 8) ++ drawn("kc", 1) ++ (1L to 20L)
+    val seeded = (1L to 40L).map { id =>
+      (id, Seq.tabulate[java.lang.Double](6)(i =>
+        if (i == 3 && holedIds(id)) null
+        else math.rint((Seq(0.0, 5.0, -5.0)((id % 3).toInt) + rnd.nextGaussian()) * 100) / 100))
+    }.toDF("vec_id", "embedding")
+    val kmL = Similarity.kmeansAssign(seeded, localRowBudget = Long.MaxValue)
+      .orderBy("vec_id").collect().toSeq
+    val kmD = Similarity.kmeansAssign(seeded, localRowBudget = -1L)
+      .orderBy("vec_id").collect().toSeq
+    assert(kmL == kmD, s"kmeans diverged on null-holed seeds:\n$kmL\nvs\n$kmD")
+    val kcL = Similarity.kcenterSelect(seeded, localRowBudget = Long.MaxValue)
+      .orderBy("rk").collect().toSeq
+    val kcD = Similarity.kcenterSelect(seeded, localRowBudget = -1L)
+      .orderBy("rk").collect().toSeq
+    assert(kcL == kcD, s"kcenter diverged on a null-holed first pick:\n$kcL\nvs\n$kcD")
+    assert(holedIds(kcL.head.getLong(1)), "k-center's first pick is not null-holed")
     // near-identical vectors around 1e12: each scaled coordinate is
     // ~1e18, so a center's coordinate sum overflows Long once 10 points
     // share it (80 points, 8 centers: one center has >= 10), while the

@@ -6455,6 +6455,12 @@ class OperatorSpec extends SparkSpec {
     assert(corpus.sliding(2).forall(w => w(0)._3 >= w(1)._3))
     corpus.foreach { case (_, w, _) =>
       assert(!TextAnalysis.RakeStopwords.contains(w), w) }
+    // no co-occurrence edge (single words, a stopword-only doc) and no
+    // documents at all: no ranked word, like the oracle's empty CTE
+    val noEdge = Seq((1L, "hello"), (2L, "the and of"), (3L, "word"))
+      .toDF("doc_id", "text")
+    Seq(noEdge, noEdge.limit(0)).foreach { d =>
+      assert(TextAnalysis.textRank(d).count() == 0L) }
   }
 
   test("blameSupplier: only the sole late supplier of a multi-supplier order is blamed (C156)") {
