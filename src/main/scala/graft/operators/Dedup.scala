@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.functions.Portable._
 
@@ -894,15 +895,9 @@ FROM base CROSS JOIN ne CROSS JOIN tri"""
   // representative-election signal than min-id when components are
   // large). Cross-engine float determinism over 10 iterations is
   // impossible (error compounds per round), so the WHOLE recurrence is
-  // integer: ranks in 1e-12 units, contrib(u) = rank(u) div deg(u),
-  // rank'(v) = teleport + (85·Σ contrib) div 100 — integer division
-  // truncates toward zero identically in both engines, so iteration 10
-  // is bit-identical and the oracle (a recursive CTE replaying the
-  // same recurrence) hash-checks it. Per round: one (src) join + one
-  // (dst) aggregate; lineage cut per round exactly like CC. Vertices
-  // are the edge list's endpoints (singletons have no rank flow).
-  // TextRank (L157) and host rank (L72) run the same recurrence over
-  // weighted edges: [[integerRank]].
+  // integer (1e-12 rank units, truncating division) and bit-identical
+  // to the oracle's recursive CTE. PageRank (unit weights), TextRank
+  // (L157) and host rank (L72) share it: [[integerRank]].
   private[graft] val RankIters = 10
   private[graft] val RankUnit = 1000000000000L // 1e-12 rank units
 
@@ -1023,85 +1018,91 @@ SELECT v AS doc_id, count(*) AS core_deg FROM (
     * rank'(v) = teleport + (85·Σ inflow) div 100 for RankIters rounds,
     * teleport = (15·(RankUnit div n)) div 100. n is `vertices` when
     * given (host rank's fixed host count), else the distinct sources.
-    * The one difference between callers is the rounding order of an
-    * edge's share: `scaleFirst` computes (rank·w) div out_w exactly
-    * (rank·w may pass BIGINT: BigInteger on the driver, decDiv on
-    * decimal(38,0) distributed); otherwise (rank div out_w)·w, which
-    * never exceeds rank. With w = 1 the two agree.
-    *
-    * r13 driver replay (DriverReplay): the recurrence is integer
-    * fixed-point BY DESIGN (portability), so a sub-budget edge frame
-    * replays operation-for-operation (Long `/` on non-negatives ≡
-    * Spark `div` ≡ DuckDB `//`) instead of paying RankIters
-    * eager-checkpoint job waves. An empty graph (n = 0) has no ranks
-    * on either side. */
+    * The callers differ only in the rounding order of an edge's share:
+    * `scaleFirst` computes (rank·w) div out_w exactly (rank·w may pass
+    * BIGINT); otherwise (rank div out_w)·w, which never exceeds rank.
+    * Both sides of the DriverReplay fork run one kernel, [[RankKernel]]:
+    * the replay on one partition holding every edge, the distributed
+    * loop on the edges hash-partitioned by src once and the state
+    * (v, (out_w, rank)) in the same partitioner, so a round shuffles
+    * only the per-dst sums and ends in one count of its checkpoint. */
   private[graft] def integerRank(edges: DataFrame, scaleFirst: Boolean,
       vertices: Option[Long] = None,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    import java.math.BigInteger
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import RankKernel._
     val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
-    val schema = StructType(Seq(e.schema("src").copy(name = "v"),
+    val schema = StructType(Seq(edges.schema("src").copy(name = "v"),
       StructField("out_w", LongType), StructField("rank", LongType)))
-    // out_w per source: a driver map beside the collected edges on the
-    // replay side, a frame on the distributed one (built only there)
-    val replay = DriverReplay.collectWithin(e, localEdgeBudget).map { es =>
-      val ow = new java.util.LinkedHashMap[Any, Long]()
-      es.foreach(r => ow.merge(r.get(0), r.getLong(2), _ + _))
-      (es, ow)
+    val rows = edges.select(col("src"), col("dst"), col("w")).rdd
+      .map(r => (r.get(0), (r.get(1), r.getLong(2)))).localCheckpoint()
+    val p = new org.apache.spark.HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // (v, out_w) per source; their count materializes `part`, so `rows` can go
+    val sources = DriverReplay.collectWithin(rows, localEdgeBudget) match {
+      case Some(es) => Left((es, outWeights(es.iterator).toArray))
+      case None =>
+        val part = rows.partitionBy(p).localCheckpoint()
+        Right((part, part.mapPartitions(outWeights, preservesPartitioning = true)))
     }
-    lazy val deg = e.groupBy(col("src").as("v")).agg(sum(col("w")).as("out_w"))
-      .localCheckpoint()
-    val n = vertices.getOrElse(replay.fold(deg.count())(_._2.size.toLong))
-    if (n == 0) return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    val teleport = (15L * (RankUnit / n)) / 100L
-    replay match {
-      case Some((es, ow)) =>
-        def share(rank: Long, w: Long, out: Long): Long =
-          if (scaleFirst) BigInteger.valueOf(rank).multiply(BigInteger.valueOf(w))
-            .divide(BigInteger.valueOf(out)).longValueExact()
-          else (rank / out) * w
-        var ranks = new java.util.HashMap[Any, Long]()
-        ow.keySet().forEach(v => ranks.put(v, RankUnit / n))
+    val sourceCount = sources.fold(_._2.length.toLong, _._2.count())
+    rows.unpersist()
+    val n = vertices.getOrElse(sourceCount) max 1L // 0 only with no sources: no ranks
+    val (contrib, adv) = (contribute(scaleFirst) _, advance((15L * (RankUnit / n)) / 100L) _)
+    sources match {
+      case Left((es, ow)) =>
+        val ranks = (1 to RankIters).foldLeft(ow.map { case (v, w) => (v, (w, RankUnit / n)) })(
+          (r, _) => adv(r.iterator, contrib(es.iterator, r.iterator)).toArray)
+        spark.createDataFrame(ranks.toSeq.map { case (v, (w, r)) => Row(v, w, r) }.asJava, schema)
+      case Right((part, ow)) =>
+        var ranks = ow.mapValues(w => (w, RankUnit / n))
         for (_ <- 1 to RankIters) {
-          val inflow = new java.util.HashMap[Any, Long]()
-          val r = ranks
-          es.foreach { row =>
-            val src = row.get(0)
-            inflow.merge(row.get(1), share(r.get(src), row.getLong(2), ow.get(src)), _ + _)
-          }
-          val next = new java.util.HashMap[Any, Long]()
-          ow.keySet().forEach(v =>
-            next.put(v, teleport + (85L * inflow.getOrDefault(v, 0L)) / 100L))
+          val in = part.zipPartitions(ranks)(contrib).partitionBy(p)
+          val next = ranks.zipPartitions(in, preservesPartitioning = true)(adv).localCheckpoint()
+          next.count()
+          ranks.unpersist()
           ranks = next
         }
-        val rows = new java.util.ArrayList[Row]()
-        ow.forEach((v, w) => rows.add(Row(v, w, ranks.get(v))))
-        spark.createDataFrame(rows, schema)
-      case None =>
-        // `div`, not `/`: Column./ is double division, and the whole
-        // point is integer truncation identical to DuckDB's `//`. The
-        // truncate-first quotient q is projected per vertex, before
-        // the edge join; column pruning drops what `share` leaves
-        // unread.
-        val share =
-          if (scaleFirst) decDiv(col("rank").cast("decimal(38,0)") * col("w"),
-            col("out_w").cast("decimal(38,0)")).cast("long")
-          else col("q") * col("w")
-        var ranks = deg.select(col("v"), col("out_w"), lit(RankUnit / n).as("rank"))
-        for (_ <- 1 to RankIters) {
-          val bySrc = ranks.select(col("v").as("src"), col("rank"), col("out_w"),
-            expr("rank div out_w").as("q"))
-          val inflow = e.join(bySrc, "src")
-            .groupBy(col("dst").as("v")).agg(sum(share).as("in_sum"))
-          ranks = deg.join(inflow, Seq("v"), "left")
-            .select(col("v"), col("out_w"),
-              (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
-            .localCheckpoint() // cut lineage per round, the CC rule
-        }
-        ranks
+        part.unpersist()
+        spark.createDataFrame(ranks.map { case (v, (w, r)) => Row(v, w, r) }, schema)
+    }
+  }
+
+  /** One [[integerRank]] round over one partition's iterators, edges
+    * (src, (dst, w)) and the state (v, (out_w, rank)) of their sources;
+    * every sum is `Math.addExact`, so an overflow throws on either side. */
+  private object RankKernel {
+    type Edge = (Any, (Any, Long))
+    type State = (Any, (Long, Long))
+    private def sums(kv: Iterator[(Any, Long)]): java.util.HashMap[Any, Long] = {
+      val m = new java.util.HashMap[Any, Long]()
+      kv.foreach { case (k, v) => m.merge(k, v, Math.addExact(_: Long, _: Long)) }
+      m
+    }
+
+    /** (v, out_w) for each source of the partition's edges */
+    def outWeights(edges: Iterator[Edge]): Iterator[(Any, Long)] =
+      sums(edges.map { case (src, (_, w)) => (src, w) }).asScala.iterator
+
+    /** Σ share of its source's rank per dst of the partition's edges */
+    def contribute(scaleFirst: Boolean)(edges: Iterator[Edge],
+        ranks: Iterator[State]): Iterator[(Any, Long)] = {
+      val state = new java.util.HashMap[Any, (Long, Long)]()
+      ranks.foreach { case (v, s) => state.put(v, s) }
+      sums(edges.map { case (src, (dst, w)) =>
+        val (out, rank) = state.get(src)
+        (dst, if (scaleFirst) (BigInt(rank) * w / out).bigInteger.longValueExact()
+          else Math.multiplyExact(rank / out, w))
+      }).asScala.iterator
+    }
+
+    /** the next state of each vertex of `ranks` from its inflow sums */
+    def advance(teleport: Long)(ranks: Iterator[State],
+        inflow: Iterator[(Any, Long)]): Iterator[State] = {
+      val in = sums(inflow)
+      ranks.map { case (v, (out, _)) =>
+        (v, (out, teleport + Math.multiplyExact(85L, in.getOrDefault(v, 0L)) / 100L))
+      }
     }
   }
 

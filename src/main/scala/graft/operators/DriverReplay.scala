@@ -6,13 +6,15 @@ import org.apache.spark.sql.Dataset
   * operators, seven distinct recurrences: CC; integer rank, which
   * PageRank, TextRank and host rank share in `Dedup.integerRank`;
   * k-core; LPA; HITS; k-means; k-center. A fixpoint whose input fits
-  * a budget is collected once and replayed
-  * on the driver; above the budget the distributed loop runs
-  * unchanged. Both sides return identical rows — the recurrences are
-  * integer-exact by design, and parity specs force each side. This is
-  * the contract of Spark's own broadcast threshold: one setting, read
-  * in one place, that changes how a result is computed, never what it
-  * is.
+  * a budget is collected once and replayed on the driver; above the
+  * budget the distributed loop runs. Both sides return identical rows
+  * — the recurrences are integer-exact by design, and parity specs
+  * force each side. Integer rank is one kernel in two placements: its
+  * round runs over one partition's iterators, on the driver one
+  * partition holding every edge, distributed each partition of the
+  * edges hash-partitioned by src. This is the contract of Spark's own
+  * broadcast threshold: one setting, read in one place, that changes
+  * how a result is computed, never what it is.
   *
   * The probe is a plain `count()`. A bounded `limit(budget + 1).count()`
   * looks cheaper on the big side but is not: on 40M rows in 16
@@ -33,9 +35,13 @@ private[graft] object DriverReplay {
     * (100k × 64 longs ≈ 52 MB). */
   val VectorRowBudget: Long = 100000L
 
-  /** The rows of `ds` when there are at most `budget` of them (the
+  /** The rows of `ds` (or `rdd`) when there are at most `budget` of them (the
     * driver-replay side), else None (the distributed side). A negative
     * budget always answers None, `Long.MaxValue` always collects. */
   def collectWithin[T](ds: Dataset[T], budget: Long): Option[Array[T]] =
     if (ds.count() <= budget) Some(ds.collect()) else None
+
+  def collectWithin[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T],
+      budget: Long): Option[Array[T]] =
+    if (rdd.count() <= budget) Some(rdd.collect()) else None
 }

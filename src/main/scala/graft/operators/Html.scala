@@ -257,12 +257,9 @@ FROM e"""
   // coverage precondition, structural rather than probabilistic), plus
   // three md5-derived links. Scale shape: link extraction is map-only
   // over the corpus; ONE (src, dst) aggregate with map-side partials
-  // collapses 100 TB of pages to a host-cardinality edge list; the
-  // iteration then runs on host-sized frames (Dedup.integerRank, the
-  // C39 recurrence). Integer portability: contribution =
-  // (rank div out_w)·w — truncate-then-scale, so every intermediate is
-  // ≤ rank and BIGINT overflow is impossible by construction; teleport
-  // and damping are the C39 constants.
+  // collapses 100 TB of pages to a host-cardinality edge list that the
+  // C39 recurrence (Dedup.integerRank) ranks with the truncate-then-
+  // scale share (rank div out_w)·w, which never exceeds rank.
   private val HostCount = 16L
 
   private def hostCol(id: Column): Column =

@@ -3469,16 +3469,12 @@ FROM scored ORDER BY score_ppm DESC, phrase ASC LIMIT $RakeTopK"""
   // rank words by weighted PageRank over the co-occurrence graph —
   // consecutive non-stopword tokens form an undirected edge weighted
   // by corpus co-occurrence count. Centrality catches connective
-  // vocabulary that RAKE's degree/frequency ratio misses. The C39
-  // integer fixed-point discipline whole: ranks in 1e-12 units,
-  // per-edge contribution rank·w div strength as an exact decDiv
-  // (rank·w passes BIGINT at corpus scale; the quotient is rank-
-  // bounded), damping 85/100 in integer division, 10 iterations
-  // bit-identical in both engines, oracle = the same recurrence as a
-  // recursive CTE. Top-20 released under a (rank DESC, word ASC)
-  // total order. Plan: one fused posexplode pass → edge aggregate;
-  // the rounds are Dedup.integerRank's, with the exact share, on the
-  // vocabulary-bounded graph.
+  // vocabulary that RAKE's degree/frequency ratio misses. The rounds
+  // are C39's (Dedup.integerRank) on the vocabulary-bounded graph, with
+  // the exact share rank·w div strength (rank·w passes BIGINT at corpus
+  // scale; the kernel divides through BigInteger). Top-20 released
+  // under a (rank DESC, word ASC) total order. Plan: one fused
+  // posexplode pass → edge aggregate → the rounds.
   private val TrTopK = 20
 
   def textRank(documents: DataFrame): DataFrame = {

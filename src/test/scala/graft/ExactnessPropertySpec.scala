@@ -170,7 +170,7 @@ class ExactnessPropertySpec extends SparkSpec {
     }
   }
 
-  test("graph recurrences: local driver replay equals the distributed waves (integer rank on Long and String keys, both shares, fixed n, BIGINT-passing rank*w, empty graph; kCore/LPA/HITS)") {
+  test("graph recurrences: local driver replay equals the distributed waves (integer rank on Long and String keys, both shares, fixed n, BIGINT-passing rank*w, empty graph, overflowing out_w throws; kCore/LPA/HITS)") {
     // r13: the size-adaptive local path extends from CC to the other
     // integer fixed-point graph recurrences; each must replay its
     // distributed loop operation-for-operation. Random graphs with
@@ -252,10 +252,34 @@ class ExactnessPropertySpec extends SparkSpec {
       ("c", "a", 1L), ("c", "b", 5L))
     assert(BigInt(Dedup.RankUnit / 3) * 1000000000L > BigInt(Long.MaxValue))
     Seq(true, false).foreach(sf => sides(big, sf, None, "BIGINT-passing rank*w"))
+    // out_w(a) passes BIGINT (Long.MaxValue + 1): both sides must throw
+    // rather than rank with a wrapped weight
+    val wraps = Seq(("a", "b", Long.MaxValue), ("a", "c", 1L), ("b", "a", 1L), ("c", "a", 1L))
+    for (sf <- Seq(true, false); budget <- Seq(Long.MaxValue, 0L)) {
+      val thrown = try { rank(wraps, sf, None, budget); None }
+        catch { case e: Exception => Some(e) }
+      assert(thrown.exists(e => Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])),
+        s"integer rank wrapped out_w (scaleFirst = $sf, budget = $budget): $thrown")
+    }
     // the empty graph has no ranks on either side (n = 0); -1 forces
     // the distributed side even on no rows
     Seq(true, false).foreach(sf =>
       assert(sides(Seq.empty, sf, None, "empty graph", distBudget = -1L).isEmpty))
+  }
+
+  test("distributed integer rank leaves at most its edge and final rank RDDs persisted") {
+    // each round releases the one before it, and the edges go once the
+    // rounds are done: what a call leaves behind does not grow with
+    // RankIters
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = (1L to 40L).flatMap(i => Seq((i, i % 40 + 1, 1L), (i, i * 7 % 40 + 1, 2L)))
+      .toDF("src", "dst", "w")
+    assert(Dedup.integerRank(edges, scaleFirst = false, localEdgeBudget = 0L)
+      .collect().length == 40)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.size <= 2, s"${left.size} persisted RDDs left: ${left.values.mkString(", ")}")
   }
 
   test("BootWeights digest-direct equals the md5-hex + conv + threshold chain") {
