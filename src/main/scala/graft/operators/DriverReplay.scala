@@ -12,7 +12,10 @@ import org.apache.spark.sql.Dataset
   * force each side. Integer rank is one kernel in two placements: its
   * round runs over one partition's iterators, on the driver one
   * partition holding every edge, distributed each partition of the
-  * edges hash-partitioned by src. This is the contract of Spark's own
+  * edges hash-partitioned by src. So are k-means and k-center: their
+  * rounds run over the collected points as one partition, or per
+  * partition of the points checkpointed once as an RDD, and the driver
+  * merges the partials. This is the contract of Spark's own
   * broadcast threshold: one setting, read in one place, that changes
   * how a result is computed, never what it is.
   *

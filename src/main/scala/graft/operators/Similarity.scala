@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1279,15 +1279,15 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
   // centroid). Every number in the recurrence is a BIGINT, so DuckDB
   // replays all `iters` rounds bit-for-bit through unrolled CTE stages
   // (the L54 fixed-unroll precedent).
-  // Scale shape: centroids are K×d driver/closure model state (the L54
-  // collect-per-round contract, K·d·8 bytes — nothing corpus-sized);
-  // ASSIGNMENT IS A PURE MAP (argmin over a literal centroid array —
-  // no join, no shuffle); each update round partial-aggregates
-  // (cid, dim) sums map-side, so its exchange carries K·d rows per
-  // task. The returned plan is scan → project: zero exchanges. At
-  // 100 TB the per-cluster coordinate sums approach BIGINT range only
-  // past ~10^12 rows × 2^22 — swap the sum to DECIMAL(38,0) there;
-  // everything else is unchanged.
+  // Scale shape: centroids are K×d driver model state (K·d·8 bytes —
+  // nothing corpus-sized). Each update round is one pass of
+  // [[CenterKernel.sums]] over every partition of the points, so a task
+  // sends K·d coordinate sums and K counts to the driver, which merges
+  // them. ASSIGNMENT IS A PURE MAP (argmin over a literal centroid
+  // array — no join, no shuffle): the returned plan is scan → project,
+  // zero exchanges. At 100 TB the per-cluster coordinate sums approach
+  // BIGINT range only past ~10^12 rows × 2^22; the sums are addExact,
+  // so they throw there rather than wrap — swap them to BigInt then.
   private val KmK = 8
   private val KmAssignIters = 3
   private val KmShift = 1L << 22
@@ -1300,11 +1300,10 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
   /** Distance+argmin columns via the codegen'd [[graft.functions.KmDist]]
     * loop (PcScore posture — the nested transform/zip_with/aggregate
     * HOF chain it replaces was interpreted per element). */
-  private def kmAssignCols(spark: org.apache.spark.sql.SparkSession,
-      pts: DataFrame, cs: IndexedSeq[Array[Long]]): DataFrame = {
+  private def kmAssignCols(pts: DataFrame, cs: IndexedSeq[Array[Long]]): DataFrame = {
     val name = s"graft_km_dist_${tcCounter.incrementAndGet()}"
     val cents = cs.toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    pts.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => graft.functions.KmDist(exprs.head, cents, name),
       "built-in")
     pts.withColumn("km", call_function(name, col("xi")))
@@ -1312,120 +1311,133 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
       .withColumn("cid", element_at(col("km"), 2))
   }
 
-  /** Local mirror of one [[graft.functions.KmDist]] call: (dist, cid)
-    * or null on a null-holed / wrong-length vector. */
-  private def kmDistLocal(xi: Array[java.lang.Long],
-      cs: IndexedSeq[Array[Long]]): Option[(Long, Int)] = {
-    val d = cs(0).length
-    if (xi == null || xi.length != d || xi.exists(_ == null)) return None
-    var best = 0L
-    var bestIdx = -1
-    var c = 0
-    while (c < cs.length) {
-      val cc = cs(c)
-      var s = 0L
-      var i = 0
-      while (i < d) {
-        val df = Math.subtractExact(xi(i), cc(i))
-        s = Math.addExact(s, Math.multiplyExact(df, df))
-        i += 1
-      }
-      if (bestIdx < 0 || s < best) { best = s; bestIdx = c }
-      c += 1
-    }
-    Some((best, bestIdx))
+  /** A point of k-means / k-center: vec_id, the scaled coordinates
+    * with a null element read as 0 (how a null-holed seed becomes a
+    * center), whether the vector is whole (not null, no null element)
+    * and its md5 draw. */
+  private final case class VecPt(id: Long, xi: Array[Long], whole: Boolean, h: Long)
+
+  /** seeds and k-center's first pick: the smallest (md5 draw, vec_id) */
+  private val drawOrder: Ordering[VecPt] = Ordering.by((p: VecPt) => (p.h, p.id))
+
+  private def vecPt(r: Row): VecPt = {
+    val xi = if (r.isNullAt(1)) null else r.getSeq[java.lang.Long](1)
+    VecPt(r.getLong(0), if (xi == null) null else xi.map(v => if (v == null) 0L else v.longValue).toArray,
+      xi != null && !xi.contains(null), r.getLong(2))
   }
 
-  /** (vec_id, xi, md5 draw) of every point when there are at most
-    * `budget` of them — the driver-replay side of k-means / k-center
-    * (DriverReplay); None sends the caller to its distributed loop. */
-  private def collectPts(pts: DataFrame, seed: String,
-      budget: Long): Option[Array[(Long, Array[java.lang.Long], Long)]] =
-    DriverReplay.collectWithin(
-      pts.withColumn("h", graft.functions.Portable.md5Long(lit(seed), col("vec_id")))
-        .select(col("vec_id"), col("xi"), col("h")), budget)
-      .map(_.map { r =>
-        val xi = if (r.isNullAt(1)) null
-          else r.getSeq[Any](1).map {
-            case null => null
-            case v: Long => java.lang.Long.valueOf(v)
-          }.toArray
-        (r.getLong(0), xi, r.getLong(2))
-      })
+  /** The round kernel of k-means and k-center over one partition's
+    * points. Both DriverReplay placements run it: the replay over every
+    * collected point as one partition, the distributed side per
+    * partition of the point RDD, merging the partials on the driver.
+    * Every sum is `Math.addExact`, so an overflow throws on either side;
+    * a malformed (not whole or wrong-length) vector has no nearest
+    * center, so it never moves a center or wins a round. */
+  private object CenterKernel {
+    type Sums = (Array[Array[Long]], Array[Long])
+    type Far = Option[(Long, Array[Long], Long)]
 
-  // r13 driver replay (DriverReplay): below the vector-row budget the
-  // ITERATION state (the collected corpus) fits the driver, so the
-  // Lloyd update rounds / k-center greedy rounds replay locally instead
-  // of paying (iters−1)·(corpus pass + collect) cluster-wide job waves.
+    /** (squared L2 distance, index) of the nearest of `cs`, the first
+      * on a tie — the local twin of one [[graft.functions.KmDist]] call */
+    private def nearest(p: VecPt, cs: IndexedSeq[Array[Long]]): Option[(Long, Int)] = {
+      if (!p.whole || p.xi.length != cs(0).length) return None
+      var best = 0L
+      var bestIdx = -1
+      var c = 0
+      while (c < cs.length) {
+        val cc = cs(c)
+        var s = 0L
+        var i = 0
+        while (i < cc.length) {
+          val df = Math.subtractExact(p.xi(i), cc(i))
+          s = Math.addExact(s, Math.multiplyExact(df, df))
+          i += 1
+        }
+        if (bestIdx < 0 || s < best) { best = s; bestIdx = c }
+        c += 1
+      }
+      Some((best, bestIdx))
+    }
+
+    /** per-center coordinate sums and point counts of the partition */
+    def sums(cents: IndexedSeq[Array[Long]])(pts: Iterator[VecPt]): Sums = {
+      val (s, n) = (Array.fill(cents.length)(new Array[Long](cents(0).length)), new Array[Long](cents.length))
+      pts.foreach(p => nearest(p, cents).foreach { case (_, c) =>
+        var i = 0
+        while (i < p.xi.length) { s(c)(i) = Math.addExact(s(c)(i), p.xi(i)); i += 1 }
+        n(c) += 1
+      })
+      (s, n)
+    }
+
+    private def add(a: Array[Long], b: Array[Long]): Array[Long] =
+      Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
+
+    def merge(a: Sums, b: Sums): Sums =
+      (Array.tabulate(a._1.length)(c => add(a._1(c), b._1(c))), add(a._2, b._2))
+
+    /** each center's truncated mean; an empty cluster keeps its center */
+    def update(cents: IndexedSeq[Array[Long]], s: Sums): IndexedSeq[Array[Long]] =
+      cents.indices.map(c => if (s._2(c) == 0) cents(c) else s._1(c).map(_ / s._2(c)))
+
+    /** the partition's (vec_id, xi, min-dist) farthest from `selected` */
+    def farthest(selected: IndexedSeq[Array[Long]])(pts: Iterator[VecPt]): Far =
+      pts.foldLeft(None: Far)((b, p) =>
+        better(b, nearest(p, selected).map { case (d, _) => (p.id, p.xi, d) }))
+
+    /** the larger min-dist, then the smaller vec_id */
+    def better(a: Far, b: Far): Far = (a, b) match {
+      case (Some(x), Some(y)) => if (y._3 > x._3 || (y._3 == x._3 && y._1 < x._1)) b else a
+      case _ => a.orElse(b)
+    }
+  }
+
+  /** The points of one k-means / k-center call in the placement
+    * DriverReplay picks: collected, as one partition, or per partition
+    * of one RDD. */
+  private type VecPoints = Either[Array[VecPt], org.apache.spark.rdd.RDD[VecPt]]
+
+  /** At most `budget` points are collected; above it they are one
+    * lazily checkpointed RDD, which its first job (the seed draw)
+    * materializes. The probe counts the column-pruned frame. */
+  private def vecPoints(pts: DataFrame, seed: String, budget: Long): VecPoints = {
+    val frame = pts.withColumn("h", graft.functions.Portable.md5Long(lit(seed), col("vec_id")))
+      .select(col("vec_id"), col("xi"), col("h"))
+    DriverReplay.collectWithin(frame, budget).map(_.map(vecPt))
+      .toLeft(frame.rdd.map(vecPt).localCheckpoint())
+  }
+
+  /** the k smallest draws of the placed points */
+  private def drawn(points: VecPoints, k: Int): Array[VecPt] =
+    points.fold(_.sorted(drawOrder).take(k), _.takeOrdered(k)(drawOrder))
+
+  /** one kernel pass over every partition of the placed points, merged */
+  private def reduce[A: scala.reflect.ClassTag](points: VecPoints)(kernel: Iterator[VecPt] => A)(
+      merge: (A, A) => A): A =
+    points.fold(ps => kernel(ps.iterator), _.mapPartitions(it => Iterator(kernel(it))).reduce(merge))
+
+  // r13 driver replay (DriverReplay), one kernel in two placements: the
+  // Lloyd update rounds and the k-center greedy rounds run
+  // [[CenterKernel]] over the points [[vecPoints]] places — the
+  // collected array below the vector-row budget, one mapPartitions →
+  // reduce job per round over the checkpointed point RDD above it.
   // Exact by construction: the recurrences are pure integer arithmetic
-  // (the L82/L83 design contract), parity spec-pinned with both paths
-  // forced — malformed (null-holed / wrong-length) vectors included,
-  // which neither path lets move a center or win a round.
+  // (the L82/L83 design contract), parity spec-pinned with both
+  // placements forced — malformed (null-holed / wrong-length) vectors,
+  // which never move a center or win a round, and the empty corpus,
+  // which has no rows, included.
   def kmeansAssign(embeddings: DataFrame, k: Int = KmK,
       iters: Int = KmAssignIters,
       localRowBudget: Long = DriverReplay.VectorRowBudget): DataFrame = {
-    val spark = embeddings.sparkSession
     val pts = kmScaled(embeddings)
-    def assigned(cs: IndexedSeq[Array[Long]]): DataFrame =
-      kmAssignCols(spark, pts, cs)
-    // ONE collect; seeds + every update round replay on the driver. The
-    // FINAL assignment stays the distributed map either way: the
-    // released frame is corpus-sized and the plan keeps its
-    // scan → project shape.
-    val cents = collectPts(pts, "km", localRowBudget).map { rows =>
-      var cents: IndexedSeq[Array[Long]] = rows
-        .sortBy(r => (r._3, r._1)).take(k)
-        .map(r => r._2.map(Long.unbox)).toIndexedSeq
-      for (_ <- 1 until iters) {
-        val sums = Array.fill(cents.length)(Array.fill(cents(0).length)(0L))
-        val ns = Array.fill(cents.length)(0L)
-        rows.foreach { case (_, xi, _) =>
-          kmDistLocal(xi, cents).foreach { case (_, c) =>
-            var i = 0
-            // checked like the distributed rounds' ANSI sum: an
-            // overflowing center throws on both sides
-            while (i < xi.length) { sums(c)(i) = Math.addExact(sums(c)(i), xi(i)); i += 1 }
-            ns(c) += 1
-          }
-        }
-        cents = cents.indices.map { c =>
-          if (ns(c) == 0) cents(c)
-          else Array.tabulate(cents(c).length)(i => sums(c)(i) / ns(c))
-        }
-      }
-      cents
-    }.getOrElse {
-      val seedRows = pts
-        .withColumn("h", graft.functions.Portable.md5Long(lit("km"), col("vec_id")))
-        .orderBy(col("h"), col("vec_id")).limit(k)
-        .select(col("h"), col("vec_id"), col("xi")).collect()
-      var cents: IndexedSeq[Array[Long]] = seedRows
-        .sortBy(r => (r.getLong(0), r.getLong(1)))
-        .map(_.getSeq[Long](2).toArray).toIndexedSeq
-      for (_ <- 1 until iters) {
-        // a malformed vector has no center (null cid) and moves none —
-        // the local kmDistLocal skip. Dropped after the collect: a
-        // filter on cid would be pushed below the projection and
-        // evaluate KmDist twice per row.
-        val upd = assigned(cents)
-          .select(col("cid"), posexplode(col("xi")).as(Seq("pos", "v")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-          .collect()
-          .filterNot(_.isNullAt(0))
-          .groupBy(_.getLong(0))
-        cents = cents.indices.map { c =>
-          upd.get(c + 1L) match {
-            case Some(rows) =>
-              val byPos = rows.map(r => r.getInt(1) -> r.getLong(2) / r.getLong(3)).toMap
-              Array.tabulate(cents(c).length)(byPos(_))
-            case None => cents(c)
-          }
-        }
-      }
-      cents
-    }
-    assigned(cents).select(col("vec_id"), col("cid"), col("dist"))
+    val points = vecPoints(pts, "km", localRowBudget)
+    var cents: IndexedSeq[Array[Long]] = drawn(points, k).map(_.xi).toIndexedSeq
+    if (cents.nonEmpty) for (_ <- 1 until iters)
+      cents = CenterKernel.update(cents, reduce(points)(CenterKernel.sums(cents))(CenterKernel.merge))
+    points.foreach(_.unpersist())
+    // the released frame is corpus-sized, so the FINAL assignment stays
+    // the distributed map either way, scan → project
+    kmAssignCols(pts, cents).select(col("vec_id"), col("cid"), col("dist"))
   }
 
   val kmeansAssignSql: String = {
@@ -1463,61 +1475,23 @@ SELECT vec_id, cid, dist FROM a$KmAssignIters"""
   // Same integer domain as L82 (exact squared-L2 BIGINTs), so the
   // whole greedy recurrence unrolls into oracle CTE stages bit-for-bit
   // (ties: larger min-dist first, then smaller vec_id).
-  // Scale: the selected set is ≤K rows of driver/closure model state;
-  // each round is a PURE MAP (min-dist against a literal center array)
-  // into one singleton max_by aggregate — map-side partials, one row
-  // per task on the wire, K−1 cluster-wide waves total. No join, no
-  // corpus shuffle anywhere.
+  // Scale: the selected set is ≤K rows of driver model state; each
+  // round is one pass of [[CenterKernel.farthest]] over every partition
+  // of the points, so a task sends one (vec_id, xi, min-dist) candidate
+  // to the driver, which keeps the `better` one — K−1 single-stage jobs
+  // in total. No join, no shuffle anywhere.
   private val KcK = 8
 
   def kcenterSelect(embeddings: DataFrame, k: Int = KcK,
       localRowBudget: Long = DriverReplay.VectorRowBudget): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val pts = kmScaled(embeddings)
-    // ONE collect; the whole greedy recurrence replays on the driver
-    // (K−1 cluster-wide waves of a corpus pass + singleton collect each
-    // become array walks over integer-exact state; output is ≤K rows
-    // either way).
-    val selected = collectPts(pts, "kc", localRowBudget).map { rows =>
-      val first = rows.minBy(r => (r._3, r._1))
-      var selected = Vector((first._1, first._2.map(Long.unbox), 0L))
-      for (_ <- 2 to k) {
-        // winner = max min-dist, tie → smaller vec_id (the distributed
-        // min_by(struct(-mind, vec_id))); a null-dist (malformed) row
-        // never wins on either path
-        var wid = 0L; var wxi: Array[Long] = null; var wd = -1L
-        rows.foreach { case (id, xi, _) =>
-          kmDistLocal(xi, selected.map(_._2)) match {
-            case Some((d, _)) =>
-              if (wd < 0 || d > wd || (d == wd && id < wid)) {
-                wid = id; wxi = xi.map(Long.unbox); wd = d
-              }
-            case None =>
-          }
-        }
-        selected :+= ((wid, wxi, wd))
-      }
-      selected
-    }.getOrElse {
-      val first = pts
-        .withColumn("h", graft.functions.Portable.md5Long(lit("kc"), col("vec_id")))
-        .orderBy(col("h"), col("vec_id")).limit(1)
-        .select(col("vec_id"), col("xi")).collect()(0)
-      var selected = Vector((first.getLong(0), first.getSeq[Long](1).toArray, 0L))
-      for (_ <- 2 to k) {
-        // min_by skips a null ordering, but struct(-mind, vec_id) is
-        // never null — a malformed row (null mind) would sort FIRST and
-        // win — so its ordering is nulled outright
-        val winner = kmAssignCols(spark, pts, selected.map(_._2))
-          .withColumn("mind", col("dist"))
-          .agg(min_by(struct(col("vec_id"), col("xi"), col("mind")),
-            when(col("mind").isNotNull, struct(-col("mind"), col("vec_id")))).as("m"))
-          .select(col("m.vec_id"), col("m.xi"), col("m.mind")).collect()(0)
-        selected :+= ((winner.getLong(0), winner.getSeq[Long](1).toArray, winner.getLong(2)))
-      }
-      selected
-    }
+    val points = vecPoints(kmScaled(embeddings), "kc", localRowBudget)
+    // an empty corpus has no first pick, and so no rows
+    var selected = drawn(points, 1).map(p => (p.id, p.xi, 0L)).toVector
+    if (selected.nonEmpty) for (_ <- 2 to k)
+      selected ++= reduce(points)(CenterKernel.farthest(selected.map(_._2)))(CenterKernel.better)
+    points.foreach(_.unpersist())
     selected.zipWithIndex
       .map { case ((id, _, radius), i) => ((i + 1).toLong, id, radius) }
       .toDF("rk", "vec_id", "radius")

@@ -630,6 +630,18 @@ class ExactnessPropertySpec extends SparkSpec {
     // k-center greedy replay on the driver; pin row-for-row equality
     // with both paths forced on random corpora (cluster structure +
     // uniform noise, duplicate points for tie pressure)
+    // (k-means rows by vec_id, k-center rows by rk) of the local side,
+    // after asserting the distributed side returns the same
+    def sides(df: org.apache.spark.sql.DataFrame, what: String)
+        : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+      val Seq(kmL, kmD) = Seq(Long.MaxValue, -1L).map(b =>
+        Similarity.kmeansAssign(df, localRowBudget = b).orderBy("vec_id").collect().toSeq)
+      assert(kmL == kmD, s"kmeans diverged ($what):\n${kmL.take(5)}\nvs\n${kmD.take(5)}")
+      val Seq(kcL, kcD) = Seq(Long.MaxValue, -1L).map(b =>
+        Similarity.kcenterSelect(df, localRowBudget = b).orderBy("rk").collect().toSeq)
+      assert(kcL == kcD, s"kcenter diverged ($what):\n$kcL\nvs\n$kcD")
+      (kmL, kcL)
+    }
     val rnd = new scala.util.Random(4133)
     (1 to 3).foreach { t =>
       val n = 40 + rnd.nextInt(40)
@@ -642,18 +654,30 @@ class ExactnessPropertySpec extends SparkSpec {
       // center nor wins a k-center round on either path
       val holed = Seq((n + 3L, Seq[java.lang.Double](9.0, null, 9.0, 9.0, 9.0, 9.0)))
         .toDF("vec_id", "embedding")
-      val df = emb.toDF("vec_id", "embedding").unionByName(holed)
-      val kmL = Similarity.kmeansAssign(df, localRowBudget = Long.MaxValue)
-        .orderBy("vec_id").collect().toSeq
-      val kmD = Similarity.kmeansAssign(df, localRowBudget = -1L)
-        .orderBy("vec_id").collect().toSeq
-      assert(kmL == kmD, s"kmeans diverged (trial $t):\n${kmL.take(5)}\nvs\n${kmD.take(5)}")
-      val kcL = Similarity.kcenterSelect(df, localRowBudget = Long.MaxValue)
-        .orderBy("rk").collect().toSeq
-      val kcD = Similarity.kcenterSelect(df, localRowBudget = -1L)
-        .orderBy("rk").collect().toSeq
-      assert(kcL == kcD, s"kcenter diverged (trial $t):\n$kcL\nvs\n$kcD")
+      sides(emb.toDF("vec_id", "embedding").unionByName(holed), s"trial $t")
     }
+    // the empty corpus: no seeds and no first pick, so no rows
+    val empty = sides(Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding"), "empty corpus")
+    assert(empty == ((Nil, Nil)), s"rows from an empty corpus: $empty")
+    // 7 partitions merged on the driver: the identical points of every
+    // third vec_id share one k-means cluster, which spans every
+    // partition, and the farthest point appears twice, at equal
+    // distance, with the smaller vec_id in the later partition; the
+    // second k-center pick must be the smaller vec_id
+    val spread = (1L to 63L).map(id => (id,
+        if (id % 3 == 0) Seq.fill(6)(0.25)
+        else Seq.fill(6)(math.rint((Seq(5.0, -5.0)((id % 3).toInt - 1) + rnd.nextGaussian()) * 100) / 100)))
+      .patch(5, Seq((501L, Seq.fill(6)(40.0))), 0).patch(60, Seq((500L, Seq.fill(6)(40.0))), 0)
+    val parts = spark.createDataFrame(spark.sparkContext.parallelize(spread, 7))
+      .toDF("vec_id", "embedding")
+    val partOf = parts.select(col("vec_id"), spark_partition_id()).as[(Long, Int)].collect().toMap
+    assert(partOf(500L) > partOf(501L), s"the tied points' partitions: $partOf")
+    val (kmP, kcP) = sides(parts, "7 partitions")
+    val spanning = kmP.filter(r => r.getLong(0) % 3 == 0 && r.getLong(0) <= 63)
+    assert(spanning.map(_.get(1)).distinct.size == 1 &&
+      spanning.map(r => partOf(r.getLong(0))).toSet == (0 until 7).toSet,
+      s"no k-means cluster spans the 7 partitions: $kmP")
+    assert(kcP(1).getLong(1) == 500L, s"k-center tie went to the larger vec_id: $kcP")
     // null-holed seeds: every k-means seed and k-center's first pick
     // (the smallest md5 draws) has a null coordinate, as do half the
     // rest. Both sides read a seed's null as 0 and never assign the
@@ -668,16 +692,7 @@ class ExactnessPropertySpec extends SparkSpec {
         if (i == 3 && holedIds(id)) null
         else math.rint((Seq(0.0, 5.0, -5.0)((id % 3).toInt) + rnd.nextGaussian()) * 100) / 100))
     }.toDF("vec_id", "embedding")
-    val kmL = Similarity.kmeansAssign(seeded, localRowBudget = Long.MaxValue)
-      .orderBy("vec_id").collect().toSeq
-    val kmD = Similarity.kmeansAssign(seeded, localRowBudget = -1L)
-      .orderBy("vec_id").collect().toSeq
-    assert(kmL == kmD, s"kmeans diverged on null-holed seeds:\n$kmL\nvs\n$kmD")
-    val kcL = Similarity.kcenterSelect(seeded, localRowBudget = Long.MaxValue)
-      .orderBy("rk").collect().toSeq
-    val kcD = Similarity.kcenterSelect(seeded, localRowBudget = -1L)
-      .orderBy("rk").collect().toSeq
-    assert(kcL == kcD, s"kcenter diverged on a null-holed first pick:\n$kcL\nvs\n$kcD")
+    val (_, kcL) = sides(seeded, "null-holed seeds")
     assert(holedIds(kcL.head.getLong(1)), "k-center's first pick is not null-holed")
     // near-identical vectors around 1e12: each scaled coordinate is
     // ~1e18, so a center's coordinate sum overflows Long once 10 points
@@ -697,6 +712,18 @@ class ExactnessPropertySpec extends SparkSpec {
       }
     assert(overflows(Long.MaxValue), "local k-means wrapped an overflowing center sum")
     assert(overflows(-1L), "distributed k-means wrapped an overflowing center sum")
+  }
+
+  test("distributed k-means and k-center leave no RDD persisted") {
+    // the checkpointed point RDD goes once the rounds are done
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val emb = (1L to 60L).map(id => (id, Seq.fill(4)((id % 5).toDouble + id * 0.01)))
+      .toDF("vec_id", "embedding")
+    assert(Similarity.kmeansAssign(emb, localRowBudget = -1L).collect().length == 60)
+    assert(Similarity.kcenterSelect(emb, localRowBudget = -1L).collect().length == 8)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"${left.size} persisted RDDs left: ${left.values.mkString(", ")}")
   }
 
   test("driver replay takes exactly budget rows locally and budget + 1 distributed") {
