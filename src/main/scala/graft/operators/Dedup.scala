@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -908,9 +909,9 @@ FROM base CROSS JOIN ne CROSS JOIN tri"""
   // stable — what survives is the k-core, the standard spam/link-farm
   // and dup-farm detector (a content farm's near-dup graph is a dense
   // core; organic near-dups are trees and chains that peel away).
-  // Each wave is one degree aggregate + two semi-joins on a frame that
-  // only SHRINKS, lineage-cut per round (the C39/L19 wave pattern);
-  // `rounds` is a fixed unroll budget mirrored in the oracle CTE
+  // Each wave is one [[KCoreKernel]] round: every alive vertex sends 1
+  // along its edges, and an alive vertex with fewer than k messages
+  // drops. `rounds` is a fixed unroll budget mirrored in the oracle CTE
   // chain, and the spec proves the corpus reaches the fixpoint inside
   // it (one extra wave changes nothing). Defining property — every
   // surviving node has ≥ k neighbors AMONG SURVIVORS — is checked on
@@ -921,59 +922,61 @@ FROM base CROSS JOIN ne CROSS JOIN tri"""
   def kCoreEdges(e0: DataFrame, k: Int = KCoreK,
       rounds: Int = KCoreRounds,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    val spark = e0.sparkSession
-    import spark.implicits._
-    var e = e0.localCheckpoint()
-    // r13 driver replay (DriverReplay): the peel is pure set
-    // arithmetic — replayed wave-for-wave (same rounds cap, same
-    // no-edge-removed early exit) instead of 2 jobs + a checkpoint per
-    // wave. Above the budget the distributed peel runs unchanged.
-    DriverReplay.collectWithin(e.select(col("x"), col("y")).as[(Long, Long)],
-        localEdgeBudget) match {
-      case Some(es0) =>
-        var es = es0
-        var r = 0
-        var stable = false
-        while (r < rounds && !stable) {
-          val deg = new java.util.HashMap[Long, Long]()
-          es.foreach { case (x, y) =>
-            deg.merge(x, 1L, _ + _); deg.merge(y, 1L, _ + _)
-          }
-          val kept = es.filter { case (x, y) => deg.get(x) >= k && deg.get(y) >= k }
-          stable = kept.length == es.length
-          es = kept
-          r += 1
-        }
-        val core = new java.util.HashMap[Long, Long]()
-        es.foreach { case (x, y) =>
-          core.merge(x, 1L, _ + _); core.merge(y, 1L, _ + _)
-        }
-        val rows = core.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-          .map(v => (v, core.get(v))).toSeq
-        return rows.toDF("v", "core_deg")
-      case None =>
+    import KCoreKernel._
+    val edges = DriverReplay.place(e0.select(col("x"), col("y")), localEdgeBudget) { r =>
+      Seq((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
     }
+    // a wave, and how many vertices it dropped that still had an edge
+    def wave(minDeg: Int)(state: Placed[State]) = Placed.round(edges, state)(send, peel(minDeg))(0L)(
+      (n, s) => if (s._2._2 > 0 && s._2._2 < minDeg) n + 1 else n, _ + _)
     // early exit (r8 verdict): a wave that removes no edge is the
     // identity, and so is every later wave here and in the oracle's
     // fixed CTE chain — the peel depth, not the budget, bounds work
-    var n = e.count()
-    var r = 0
-    var stable = false
-    while (r < rounds && !stable) {
-      val deg = e.select(col("x").as("v")).unionAll(e.select(col("y").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      val keep = deg.where(col("d") >= k).select(col("v")).localCheckpoint()
-      e = e
-        .join(keep.withColumnRenamed("v", "x"), Seq("x"), "left_semi")
-        .join(keep.withColumnRenamed("v", "y"), Seq("y"), "left_semi")
-        .localCheckpoint()
-      val n2 = e.count()
-      stable = n2 == n
-      n = n2
-      r += 1
+    val (peeled, peeling) = waves(edges.mapPartitions(init), rounds)(wave(k))
+    // unless the last wave removed edges its degrees are current; if it
+    // did, a wave at k = 0, which drops nothing, recounts them
+    val state = if (peeling > 0) wave(0)(peeled)._1 else peeled
+    edges.release()
+    val schema = StructType(Seq("v", "core_deg").map(StructField(_, LongType, false)))
+    state.mapPartitions(_.collect { case (v, (_, d)) if d > 0 => (v, d) })
+      .toDF(e0.sparkSession, schema) { case (v, d) => Row(v, d) }
+  }
+
+  /** A [[kCoreEdges]] wave over one partition: edges (v, u) both ways,
+    * state (v, (alive, degree among the alive at the wave's start)). */
+  private object KCoreKernel {
+    type State = (Long, (Boolean, Long))
+    def init(edges: Iterator[(Long, Long)]): Iterator[State] =
+      edges.map(_._1).distinct.map(v => (v, (true, 0L)))
+
+    /** 1 along each edge of an alive vertex, summed per neighbor */
+    def send(edges: Iterator[(Long, Long)], state: Iterator[State]): Iterator[(Long, Long)] = {
+      val alive = new java.util.HashSet[Long]()
+      state.foreach { case (v, (a, _)) => if (a) alive.add(v) }
+      sums(edges.collect { case (v, u) if alive.contains(v) => (u, 1L) }).asScala.iterator
     }
-    e.select(col("x").as("v")).unionAll(e.select(col("y").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
+
+    /** each alive vertex's degree; below k it drops */
+    def peel(k: Int)(state: Iterator[State], in: Iterator[(Long, Long)]): Iterator[State] = {
+      val deg = sums(in)
+      state.map { case (v, (alive, _)) =>
+        val d = if (alive) deg.getOrDefault(v, 0L) else 0L
+        (v, (alive && d >= k, d))
+      }
+    }
+  }
+
+  /** `wave` from `init` until it changes nothing or ran `rounds` times,
+    * with how much its last run changed */
+  private def waves[S](init: S, rounds: Int)(wave: S => (S, Long)): (S, Long) =
+    Iterator.iterate((init, 1L))(s => wave(s._1)).zipWithIndex
+      .find { case ((_, n), r) => r == rounds || n == 0 }.get._1
+
+  /** per key, the exact sum of its values */
+  private def sums[K](kv: Iterator[(K, Long)]): java.util.HashMap[K, Long] = {
+    val m = new java.util.HashMap[K, Long]()
+    kv.foreach { case (k, v) => m.merge(k, v, Math.addExact(_: Long, _: Long)) }
+    m
   }
 
   def kCore(documents: DataFrame): DataFrame =
@@ -1021,51 +1024,25 @@ SELECT v AS doc_id, count(*) AS core_deg FROM (
     * The callers differ only in the rounding order of an edge's share:
     * `scaleFirst` computes (rank·w) div out_w exactly (rank·w may pass
     * BIGINT); otherwise (rank div out_w)·w, which never exceeds rank.
-    * Both sides of the DriverReplay fork run one kernel, [[RankKernel]]:
-    * the replay on one partition holding every edge, the distributed
-    * loop on the edges hash-partitioned by src once and the state
-    * (v, (out_w, rank)) in the same partitioner, so a round shuffles
-    * only the per-dst sums and ends in one count of its checkpoint. */
+    * Both placements (DriverReplay.place) run one kernel, [[RankKernel]],
+    * over the edges keyed by src; a round moves only the per-dst sums. */
   private[graft] def integerRank(edges: DataFrame, scaleFirst: Boolean,
       vertices: Option[Long] = None,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import RankKernel._
-    val spark = edges.sparkSession
     val schema = StructType(Seq(edges.schema("src").copy(name = "v"),
       StructField("out_w", LongType), StructField("rank", LongType)))
-    val rows = edges.select(col("src"), col("dst"), col("w")).rdd
-      .map(r => (r.get(0), (r.get(1), r.getLong(2)))).localCheckpoint()
-    val p = new org.apache.spark.HashPartitioner(spark.sessionState.conf.numShufflePartitions)
-    // (v, out_w) per source; their count materializes `part`, so `rows` can go
-    val sources = DriverReplay.collectWithin(rows, localEdgeBudget) match {
-      case Some(es) => Left((es, outWeights(es.iterator).toArray))
-      case None =>
-        val part = rows.partitionBy(p).localCheckpoint()
-        Right((part, part.mapPartitions(outWeights, preservesPartitioning = true)))
-    }
-    val sourceCount = sources.fold(_._2.length.toLong, _._2.count())
-    rows.unpersist()
-    val n = vertices.getOrElse(sourceCount) max 1L // 0 only with no sources: no ranks
+    val es = DriverReplay.place(edges.select(col("src"), col("dst"), col("w")), localEdgeBudget)(
+      r => Iterator.single((r.get(0), (r.get(1), r.getLong(2)))))
+    // (v, out_w) per source, and how many sources there are
+    val (ow, sources) = es.mapPartitions(outWeights).materialize(0L)((n, _) => n + 1, _ + _)
+    val n = vertices.getOrElse(sources) max 1L // 0 only with no sources: no ranks
     val (contrib, adv) = (contribute(scaleFirst) _, advance((15L * (RankUnit / n)) / 100L) _)
-    sources match {
-      case Left((es, ow)) =>
-        val ranks = (1 to RankIters).foldLeft(ow.map { case (v, w) => (v, (w, RankUnit / n)) })(
-          (r, _) => adv(r.iterator, contrib(es.iterator, r.iterator)).toArray)
-        spark.createDataFrame(ranks.toSeq.map { case (v, (w, r)) => Row(v, w, r) }.asJava, schema)
-      case Right((part, ow)) =>
-        var ranks = ow.mapValues(w => (w, RankUnit / n))
-        for (_ <- 1 to RankIters) {
-          val in = part.zipPartitions(ranks)(contrib).partitionBy(p)
-          val next = ranks.zipPartitions(in, preservesPartitioning = true)(adv).localCheckpoint()
-          next.count()
-          ranks.unpersist()
-          ranks = next
-        }
-        part.unpersist()
-        spark.createDataFrame(ranks.map { case (v, (w, r)) => Row(v, w, r) }, schema)
-    }
+    val ranks = (1 to RankIters).foldLeft(ow.mapPartitions(_.map { case (v, w) => (v, (w, RankUnit / n)) }))(
+      (r, _) => Placed.round(es, r)(contrib, adv)(0L)((n, _) => n + 1, _ + _)._1)
+    ow.release()
+    es.release()
+    ranks.toDF(edges.sparkSession, schema) { case (v, (w, r)) => Row(v, w, r) }
   }
 
   /** One [[integerRank]] round over one partition's iterators, edges
@@ -1074,11 +1051,6 @@ SELECT v AS doc_id, count(*) AS core_deg FROM (
   private object RankKernel {
     type Edge = (Any, (Any, Long))
     type State = (Any, (Long, Long))
-    private def sums(kv: Iterator[(Any, Long)]): java.util.HashMap[Any, Long] = {
-      val m = new java.util.HashMap[Any, Long]()
-      kv.foreach { case (k, v) => m.merge(k, v, Math.addExact(_: Long, _: Long)) }
-      m
-    }
 
     /** (v, out_w) for each source of the partition's edges */
     def outWeights(edges: Iterator[Edge]): Iterator[(Any, Long)] =
@@ -1766,85 +1738,63 @@ FROM scalars s JOIN named n USING (cluster_id) JOIN mode m USING (cluster_id)"""
   // group (a template family, a mirror farm) inside one big connected
   // blob. Synchronous LPA with a fully deterministic update: each
   // round, v adopts the label held by the PLURALITY of its neighbors
-  // (count desc, then smallest label — encoded as one
-  // min(struct(-cnt, label)) aggregate, no window over data). Fixed
-  // R-round unroll (the C39/C49 budget pattern), lineage-cut per
-  // round; isolated docs keep their own id via the final left join.
-  // Each round = one (src) hash join + one (dst, label) partial-agged
-  // count + one (dst) argmax — every shuffle keys on a vertex, and
-  // the tally frame is |E| rows at worst, so a 100 TB edge list runs
-  // R bounded waves. The oracle unrolls the identical recurrence as
-  // MATERIALIZED CTE stages (row_number tie-break mirrors the struct
-  // min exactly); the spec plants two cliques joined by one bridge
-  // edge and proves they resolve to separate communities, plus
-  // repartition invariance on the corpus.
+  // (count desc, then smallest label). Fixed R-round unroll (the
+  // C39/C49 budget pattern); isolated docs keep their own id via the
+  // final left join. Each round is one [[LpaKernel]] round: a partition
+  // counts (dst, label of src) over its edges, and the partial counts
+  // move to dst's partition, where they sum to the plurality — at most
+  // one message per (dst, label) per partition, so a 100 TB edge list
+  // runs R bounded waves. The oracle unrolls the identical recurrence
+  // as MATERIALIZED CTE stages (row_number, same tie-break); the spec
+  // plants two cliques joined by one bridge edge and proves they
+  // resolve to separate communities, plus repartition invariance.
   private val LpaRounds = 4
 
-  /** Synchronous deterministic LPA over an (x, y) pair list. */
+  /** Synchronous deterministic LPA over an (x, y) pair list: (v, label)
+    * for every vertex of a pair. */
   def labelPropagationEdges(pairs: DataFrame, rounds: Int = LpaRounds,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.unionAll(pairs.select(col("y").as("x"), col("x").as("y")))
-      .select(col("x").as("src"), col("y").as("dst")).localCheckpoint()
-    // r13 driver replay (DriverReplay): the synchronous plurality
-    // update — per round, v adopts (max neighbor-label count, tie min
-    // label) — replays round-for-round (same rounds cap, same
-    // unchanged-round early exit).
-    DriverReplay.collectWithin(edges.as[(Long, Long)], localEdgeBudget) match {
-      case Some(es) =>
-        var labels = new java.util.HashMap[Long, Long]()
-        es.foreach { case (s, _) => labels.putIfAbsent(s, s) }
-        var r = 0
-        var stable = false
-        while (r < rounds && !stable) {
-          // tally neighbor labels per dst: (dst, label) -> cnt
-          val tally = new java.util.HashMap[(Long, Long), Long]()
-          val l = labels
-          es.foreach { case (src, dst) =>
-            tally.merge((dst, l.get(src)), 1L, _ + _)
-          }
-          // argmax per dst: best (cnt desc, label asc)
-          val best = new java.util.HashMap[Long, (Long, Long)]()
-          tally.forEach { case ((dst, lab), cnt) =>
-            val cur = best.get(dst)
-            if (cur == null || cnt > cur._1 || (cnt == cur._1 && lab < cur._2))
-              best.put(dst, (cnt, lab))
-          }
-          val nl = new java.util.HashMap[Long, Long]()
-          best.forEach { case (dst, (_, lab)) => nl.put(dst, lab) }
-          stable = nl.equals(labels)
-          labels = nl
-          r += 1
-        }
-        val rows = labels.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-          .map(v => (v, labels.get(v))).toSeq
-        return rows.toDF("v", "label")
-      case None =>
+    import LpaKernel._
+    require(rounds > 0, s"LPA needs a round, got $rounds")
+    val edges = DriverReplay.place(pairs.unionAll(pairs.select(col("y"), col("x"))),
+      localEdgeBudget)(r => Iterator.single((r.getLong(0), r.getLong(1))))
+    // early exit: the update is deterministic in the labels, so after an
+    // unchanged round every later one (oracle's included) is the identity
+    val (labels, _) = waves(edges.mapPartitions(own), rounds)(Placed.round(edges, _)(tally, adopt)(0L)(
+      (n, s) => if (s._2._2) n + 1 else n, _ + _))
+    edges.release()
+    val schema = StructType(Seq("v", "label").map(StructField(_, LongType, false)))
+    labels.toDF(pairs.sparkSession, schema) { case (v, (l, _)) => Row(v, l) }
+  }
+
+  /** A [[labelPropagationEdges]] round over one partition: edges
+    * (src, dst), state (v, (label, changed)). */
+  private object LpaKernel {
+    type State = (Long, (Long, Boolean))
+    def own(edges: Iterator[(Long, Long)]): Iterator[State] =
+      edges.map(_._1).distinct.map(v => (v, (v, true)))
+
+    /** the partition's count per (dst, label of src) */
+    def tally(edges: Iterator[(Long, Long)], labels: Iterator[State]): Iterator[(Long, (Long, Long))] = {
+      val label = new java.util.HashMap[Long, Long]()
+      labels.foreach { case (v, (l, _)) => label.put(v, l) }
+      sums(edges.map { case (src, dst) => ((dst, label.get(src)), 1L) })
+        .asScala.iterator.map { case ((dst, l), n) => (dst, (l, n)) }
     }
-    var labels = edges.select(col("src").as("v"))
-      .distinct().select(col("v"), col("v").as("label")).localCheckpoint()
-    var r = 0
-    var stable = false
-    while (r < rounds && !stable) {
-      val next = edges.join(labels.withColumnRenamed("v", "src"), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-          .getField("l").as("label"))
-        .select(col("dst").as("v"), col("label"))
-        .localCheckpoint()
-      // early exit: the update is deterministic in the label frame, so
-      // an unchanged round makes every later round (oracle's included)
-      // the identity; one keyed anti-compare per round buys skipped waves
-      stable = next.alias("n")
-        .join(labels.alias("p"), Seq("v"))
-        .where(col("n.label") =!= col("p.label"))
-        .limit(1).count() == 0
-      labels = next
-      r += 1
+
+    /** each vertex adopts the label most of its neighbors hold, the
+      * smallest among equal counts */
+    def adopt(labels: Iterator[State], tallies: Iterator[(Long, (Long, Long))]): Iterator[State] = {
+      val best = new java.util.HashMap[Long, (Long, Long)]()
+      sums(tallies.map { case (dst, (l, n)) => ((dst, l), n) }).forEach { case ((dst, l), n) =>
+        val cur = best.get(dst)
+        if (cur == null || n > cur._1 || (n == cur._1 && l < cur._2)) best.put(dst, (n, l))
+      }
+      labels.map { case (v, (l, _)) =>
+        val nl = best.get(v)._2
+        (v, (nl, nl != l))
+      }
     }
-    labels
   }
 
   /** (doc_id, community, n_members) over the simhash near-dup graph;

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.functions.Portable._
 
@@ -4630,13 +4632,12 @@ FROM agg"""
   // — the mutually-recursive definition marketplaces rank both sides
   // with. Cross-engine float determinism over iterations is
   // impossible (the C39 lesson), so the WHOLE recurrence is integer:
-  // scores in 1e-12 units, each half-step renormalized by its max via
-  // exact decDiv (sums reach deg·10¹² ≈ 10¹⁸⁺ — past BIGINT at scale,
-  // so the quotient runs in decimal). Three full rounds, a fixed
-  // unroll budget mirrored by the oracle's CTE chain (the C49 rule).
-  // Plan: edges built once (join + distinct) and checkpointed; each
-  // half-step is one equi-join + one aggregate + one single-row max
-  // broadcast; lineage cut per round.
+  // scores in 1e-12 units, each half-step renormalized by its max in
+  // BigInt (sums reach deg·10¹² — past BIGINT at scale). Three full
+  // rounds, a fixed unroll budget mirrored by the oracle's CTE chain
+  // (the C49 rule). Plan: edges c → s keyed by c and s → c keyed by s,
+  // placed once; each half-step is one [[HitsKernel]] round, whose max
+  // over the receiving side is the aggregate that materializes it.
   private val HitsIters = 3
   private val HitsUnit = 1000000000000L
 
@@ -4651,76 +4652,54 @@ FROM agg"""
     * split out for the local/distributed parity spec. */
   private[graft] def hitsEdges(e0: DataFrame,
       localEdgeBudget: Long = DriverReplay.GraphEdgeBudget): DataFrame = {
-    val spark = e0.sparkSession
-    import spark.implicits._
-    val d38 = "decimal(38,0)"
-    val edges = e0.localCheckpoint()
-    // r13 driver replay (DriverReplay): the recurrence is exact-integer
-    // BY DESIGN (1e-12 units, decDiv renorm), so a sub-budget edge frame
-    // replays in BigInteger — bit-identical (decDiv on non-negatives ≡
-    // BigInt divide) — instead of 3 rounds × (2 joins + 2 aggregates +
-    // 2 single-partition windows).
-    DriverReplay.collectWithin(
-        edges.select(col("c").cast("long"), col("s").cast("long")).as[(Long, Long)],
-        localEdgeBudget) match {
-      case Some(es) =>
-        val unit = java.math.BigInteger.valueOf(HitsUnit)
-        var h = new java.util.HashMap[Long, java.math.BigInteger]()
-        var a = new java.util.HashMap[Long, java.math.BigInteger]()
-        es.foreach { case (c, s) => h.putIfAbsent(c, unit); a.putIfAbsent(s, unit) }
-        for (_ <- 1 to HitsIters) {
-          val ar = new java.util.HashMap[Long, java.math.BigInteger]()
-          val hCur = h
-          es.foreach { case (c, s) =>
-            ar.merge(s, hCur.get(c), (x, y) => x.add(y))
-          }
-          var am = java.math.BigInteger.ZERO
-          ar.forEach((_, v) => if (v.compareTo(am) > 0) am = v)
-          val aNext = new java.util.HashMap[Long, java.math.BigInteger]()
-          ar.forEach((s, v) => aNext.put(s, v.multiply(unit).divide(am)))
-          a = aNext
-          val hr = new java.util.HashMap[Long, java.math.BigInteger]()
-          es.foreach { case (c, s) =>
-            hr.merge(c, a.get(s), (x, y) => x.add(y))
-          }
-          var hm = java.math.BigInteger.ZERO
-          hr.forEach((_, v) => if (v.compareTo(hm) > 0) hm = v)
-          val hNext = new java.util.HashMap[Long, java.math.BigInteger]()
-          hr.forEach((c, v) => hNext.put(c, v.multiply(unit).divide(hm)))
-          h = hNext
-        }
-        val hubRows = h.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-          .map(c => ("hub", c, h.get(c).longValueExact())).toSeq
-        val authRows = a.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-          .map(s => ("authority", s, a.get(s).longValueExact())).toSeq
-        return (hubRows ++ authRows).toDF("node_type", "node_id", "score")
-      case None =>
+    import HitsKernel._
+    val edges = DriverReplay.place(e0.select(col("c").cast("long"), col("s").cast("long")),
+      localEdgeBudget)(r => Seq((r.getLong(0), (true, r.getLong(1))), (r.getLong(1), (false, r.getLong(0)))))
+    var state = edges.mapPartitions(init)
+    // each side's max raw sum, which its scores divide by
+    val top = scala.collection.mutable.Map(true -> BigInt(HitsUnit), false -> BigInt(HitsUnit))
+    // authorities from hubs, then hubs from authorities
+    for (_ <- 1 to HitsIters; hub <- Seq(false, true)) {
+      val (next, m) = Placed.round(edges, state)(send(!hub, top(!hub)), gather(hub))(BigInt(0))(
+        (m, v) => if (v._2._1 == hub) m max v._2._2 else m, _ max _)
+      state = next
+      top(hub) = m
     }
-    var hub = edges.select(col("c")).distinct()
-      .select(col("c"), lit(HitsUnit).as("h"))
-    var auth = edges.select(col("s")).distinct()
-      .select(col("s"), lit(HitsUnit).as("a"))
-    // per-round renormalization as a WINDOW over the node-bounded
-    // frame — neither a broadcast of a separate aggregate (which
-    // re-materializes the whole chain per round) nor a per-round
-    // localCheckpoint (a full job each); the q_pca A/B in PLANS.md
-    val Wall = Window.partitionBy(lit(1))
-    for (_ <- 1 to HitsIters) {
-      val araw = edges.join(hub, "c").groupBy(col("s"))
-        .agg(sum(col("h").cast(d38)).as("ar"))
-      auth = araw.withColumn("am", max(col("ar")).over(Wall))
-        .select(col("s"),
-          decDiv(col("ar") * HitsUnit, col("am")).cast("long").as("a"))
-      val hraw = edges.join(auth, "s").groupBy(col("c"))
-        .agg(sum(col("a").cast(d38)).as("hr"))
-      hub = hraw.withColumn("hm", max(col("hr")).over(Wall))
-        .select(col("c"),
-          decDiv(col("hr") * HitsUnit, col("hm")).cast("long").as("h"))
+    edges.release()
+    val (hm, am) = (top(true), top(false))
+    state.toDF(e0.sparkSession, StructType(StructField("node_type", StringType) +:
+        Seq("node_id", "score").map(StructField(_, LongType, false)))) { case (id, (hub, raw)) =>
+      Row(if (hub) "hub" else "authority", id, score(raw, if (hub) hm else am))
     }
-    hub.select(lit("hub").as("node_type"), col("c").cast("long").as("node_id"),
-        col("h").as("score"))
-      .unionAll(auth.select(lit("authority").as("node_type"),
-        col("s").cast("long").as("node_id"), col("a").as("score")))
+  }
+
+  /** A [[hitsEdges]] half-step over one partition: edges (c, (true, s))
+    * and (s, (false, c)), state (id, (hub, raw sum)); a customer and a
+    * supplier may share an id, never a side. */
+  private object HitsKernel {
+    type State = (Long, (Boolean, BigInt))
+    def init(edges: Iterator[(Long, (Boolean, Long))]): Iterator[State] =
+      edges.map { case (v, (hub, _)) => (v, hub) }.distinct
+        .map { case (v, hub) => (v, (hub, BigInt(HitsUnit))) }
+
+    def score(raw: BigInt, max: BigInt): Long = (raw * HitsUnit / max).bigInteger.longValueExact()
+
+    /** the scores of the `hub` side's vertices, summed per neighbor */
+    def send(hub: Boolean, max: BigInt)(edges: Iterator[(Long, (Boolean, Long))],
+        state: Iterator[State]): Iterator[(Long, BigInt)] = {
+      val scores = new java.util.HashMap[Long, BigInt]()
+      state.foreach { case (v, (h, raw)) => if (h == hub) scores.put(v, score(raw, max)) }
+      val in = new java.util.HashMap[Long, BigInt]()
+      edges.foreach { case (v, (h, u)) => if (h == hub) in.merge(u, scores.get(v), _ + _) }
+      in.asScala.iterator
+    }
+
+    /** the `hub` side's vertices take their sums; the other side keeps its own */
+    def gather(hub: Boolean)(state: Iterator[State], msgs: Iterator[(Long, BigInt)]): Iterator[State] = {
+      val in = new java.util.HashMap[Long, BigInt]()
+      msgs.foreach { case (v, x) => in.merge(v, x, _ + _) }
+      state.map { case (v, (h, raw)) => (v, (h, if (h == hub) in.getOrDefault(v, BigInt(0)) else raw)) }
+    }
   }
 
   val hitsSql: String = {
@@ -5173,7 +5152,7 @@ FROM (
   // integer counts + decDiv ppm shares. Plan: one parse+explode pass
   // to the (key) frame; single-row total broadcast.
   def jsonProfile(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{MapType, StringType}
+    import org.apache.spark.sql.types.MapType
     val total = events.agg(count(lit(1)).as("n_rows"))
     val kv = events.select(from_json(col("props"),
         MapType(StringType, StringType)).as("m"))

@@ -182,6 +182,23 @@ class ExactnessPropertySpec extends SparkSpec {
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct
+    // k-core, LPA and HITS at both placements: the same rows and the
+    // same schema; `distBudget` -1 forces the distributed side even on
+    // no rows
+    def placements(what: String, distBudget: Long = 0L)(run: Long => org.apache.spark.sql.DataFrame)
+        : Seq[org.apache.spark.sql.Row] = {
+      val Seq(l, d) = Seq(Long.MaxValue, distBudget).map(run)
+      val Seq(lr, dr) = Seq(l, d).map(df => df.orderBy(df.columns.map(col): _*).collect().toSeq)
+      assert(lr == dr, s"$what diverged:\n$lr\nvs\n$dr")
+      assert(l.schema == d.schema, s"$what schemas differ: ${l.schema} vs ${d.schema}")
+      lr
+    }
+    def kCore(p: org.apache.spark.sql.DataFrame, tag: String) =
+      placements(s"kCore ($tag)")(b => Dedup.kCoreEdges(p, localEdgeBudget = b))
+    def lpa(p: org.apache.spark.sql.DataFrame, tag: String, rounds: Int = 4) =
+      placements(s"LPA ($tag)")(b => Dedup.labelPropagationEdges(p, rounds, localEdgeBudget = b))
+    def hits(bip: org.apache.spark.sql.DataFrame, tag: String) =
+      placements(s"HITS ($tag)")(b => Relational.hitsEdges(bip, localEdgeBudget = b))
     (1 to 3).foreach { t =>
       val pairs = randPairs(60 + rnd.nextInt(100), 50)
       val p = pairs.toDF("x", "y")
@@ -191,35 +208,59 @@ class ExactnessPropertySpec extends SparkSpec {
       val prD = graft.operators.Dedup.pageRankEdges(p, localEdgeBudget = 0L)
         .orderBy("doc_id").collect().toSeq
       assert(prL == prD, s"pageRank diverged (trial $t):\n$prL\nvs\n$prD")
-      // kCore (rounds default; also a deep-peel chain below)
-      val kcL = graft.operators.Dedup.kCoreEdges(p, localEdgeBudget = Long.MaxValue)
-        .orderBy("v").collect().toSeq
-      val kcD = graft.operators.Dedup.kCoreEdges(p, localEdgeBudget = 0L)
-        .orderBy("v").collect().toSeq
-      assert(kcL == kcD, s"kCore diverged (trial $t)")
-      // LPA
-      val lpL = graft.operators.Dedup.labelPropagationEdges(p, localEdgeBudget = Long.MaxValue)
-        .orderBy("v").collect().toSeq
-      val lpD = graft.operators.Dedup.labelPropagationEdges(p, localEdgeBudget = 0L)
-        .orderBy("v").collect().toSeq
-      assert(lpL == lpD, s"LPA diverged (trial $t)")
+      kCore(p, s"trial $t")
+      lpa(p, s"trial $t")
       // HITS over a bipartite (c, s) frame
-      val bip = (1 to 120).map(_ =>
-        (rnd.nextInt(20).toLong + 1, rnd.nextInt(8).toLong + 100)).distinct.toDF("c", "s")
-      val hL = graft.operators.Relational.hitsEdges(bip, localEdgeBudget = Long.MaxValue)
-        .orderBy("node_type", "node_id").collect().toSeq
-      val hD = graft.operators.Relational.hitsEdges(bip, localEdgeBudget = 0L)
-        .orderBy("node_type", "node_id").collect().toSeq
-      assert(hL == hD, s"HITS diverged (trial $t)")
+      hits((1 to 120).map(_ =>
+        (rnd.nextInt(20).toLong + 1, rnd.nextInt(8).toLong + 100)).distinct.toDF("c", "s"), s"trial $t")
     }
-    // chain-40: kCore peels from both ends — exercises multiple waves
-    // and the early exit in both paths
+    // chain-40: kCore peels from both ends — exercises multiple waves,
+    // the round cap (the chain outlasts it) and the early exit
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("x", "y")
-    val a = graft.operators.Dedup.kCoreEdges(chain, localEdgeBudget = Long.MaxValue)
-      .orderBy("v").collect().toSeq
-    val b = graft.operators.Dedup.kCoreEdges(chain, localEdgeBudget = 0L)
-      .orderBy("v").collect().toSeq
-    assert(a == b, "kCore chain diverged")
+    assert(kCore(chain, "chain-40").nonEmpty, "chain-40 peeled away inside the round cap")
+    assert(kCore((1L until 7L).map(i => (i, i + 1)).toDF("x", "y"), "chain-7").isEmpty,
+      "chain-7 outlived its peel")
+    // the empty graph: no rows on either side
+    val none = Seq.empty[(Long, Long)].toDF("x", "y")
+    assert(placements("kCore (empty)", -1L)(b => Dedup.kCoreEdges(none, localEdgeBudget = b)).isEmpty)
+    assert(placements("LPA (empty)", -1L)(b => Dedup.labelPropagationEdges(none, localEdgeBudget = b)).isEmpty)
+    assert(placements("HITS (empty)", -1L)(b =>
+      Relational.hitsEdges(none.toDF("c", "s"), localEdgeBudget = b)).isEmpty)
+    // inputs in 7 partitions; distributed, each vertex's state sits in
+    // the partition of its edges, which its output row keeps
+    def spread(rows: Seq[(Long, Long)], names: String*) =
+      spark.sparkContext.parallelize(rows, 7).toDF(names: _*)
+    def partOf(df: org.apache.spark.sql.DataFrame, key: String*): Map[Seq[Any], Int] =
+      df.select(key.map(col) :+ spark_partition_id(): _*).collect()
+        .map(r => r.toSeq.init -> r.getInt(key.length)).toMap
+    kCore(spread(randPairs(150, 40), "x", "y"), "7 partitions")
+    // LPA: in round 2, vertex 50's neighbors 5 and 6 hold label 1 and 8
+    // and 12 hold label 2, a 2-2 tie the smaller label wins. The two
+    // counts for label 1 come from different partitions and the two for
+    // label 2 from one, so a round that took a partition's count for a
+    // (vertex, label) in place of their sum would pick label 2.
+    val tie = spread(Seq((1L, 5L), (1L, 6L), (5L, 50L), (6L, 50L), (2L, 8L), (2L, 12L),
+      (8L, 50L), (12L, 50L)), "x", "y")
+    val lpaPart = partOf(Dedup.labelPropagationEdges(tie, localEdgeBudget = 0L), "v")
+      .map { case (k, p) => k.head -> p }
+    assert(lpaPart(5L) != lpaPart(6L) && lpaPart(8L) == lpaPart(12L),
+      s"the tie's counts are not split as planned: $lpaPart")
+    assert(lpa(tie, "7 partitions, tie", rounds = 2)
+      .collectFirst { case r if r.getLong(0) == 50L => r.getLong(1) }.contains(1L),
+      "the 2-2 tie at vertex 50 did not go to the smaller label")
+    lpa(tie, "7 partitions, tie, all rounds")
+    // HITS: customer 1 buys from every supplier and supplier 102 sells
+    // to every customer, so they are the top hub and the top authority
+    // (score HitsUnit); they sit in different partitions, so each
+    // half-step's max must merge them
+    val bip = spread(((100L to 111L).map(s => (1L, s)) ++ (1L to 30L).map(c => (c, 102L)) ++
+      (1 to 150).map(_ => (rnd.nextInt(30).toLong + 1, rnd.nextInt(12).toLong + 100))).distinct, "c", "s")
+    val (topHub, topAuth) = hits(bip, "7 partitions").filter(_.getLong(2) == 1000000000000L)
+      .map(r => Seq(r.getString(0), r.getLong(1))).partition(_.head == "hub")
+    val hitsPart = partOf(Relational.hitsEdges(bip, localEdgeBudget = 0L), "node_type", "node_id")
+    assert(topHub.nonEmpty && topAuth.nonEmpty &&
+      topHub.map(hitsPart).intersect(topAuth.map(hitsPart)).isEmpty,
+      s"the top hub and authority share a partition: ${(topHub ++ topAuth).map(k => k -> hitsPart(k))}")
     // the shared integer rank (PageRank, TextRank, host rank) on
     // directed String-keyed weighted graphs: sinks, sources without
     // in-edges, weights above 1, under both rounding orders of a share
@@ -280,6 +321,27 @@ class ExactnessPropertySpec extends SparkSpec {
       .collect().length == 40)
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(left.size <= 2, s"${left.size} persisted RDDs left: ${left.values.mkString(", ")}")
+  }
+
+  test("distributed k-core, LPA and HITS leave at most their final state persisted") {
+    // each round releases the one before it and the edges go once the
+    // rounds are done, so what a call leaves behind does not grow with
+    // its rounds: chain-40 runs k-core to its cap, the two rings LPA
+    // through its rounds, HITS its six half-steps
+    val sc = spark.sparkContext
+    def leftBy(what: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      assert(run.collect().nonEmpty, s"$what returned no rows")
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.size <= 1, s"$what left ${left.size} persisted RDDs: ${left.values.mkString(", ")}")
+    }
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("x", "y")
+    leftBy("k-core")(Dedup.kCoreEdges(chain, localEdgeBudget = 0L))
+    val rings = (0L until 30L).flatMap(i => Seq((i, (i + 1) % 30), (i, (i + 2) % 30),
+      (100 + i, 100 + (i + 1) % 30)))
+    leftBy("LPA")(Dedup.labelPropagationEdges(rings.toDF("x", "y"), localEdgeBudget = 0L))
+    val bip = (1L to 40L).flatMap(c => Seq((c, 100 + c % 7), (c, 100 + c * c % 11))).distinct
+    leftBy("HITS")(Relational.hitsEdges(bip.toDF("c", "s"), localEdgeBudget = 0L))
   }
 
   test("BootWeights digest-direct equals the md5-hex + conv + threshold chain") {

@@ -3353,7 +3353,6 @@ class OperatorSpec extends SparkSpec {
       "q_mcnemar" -> "crossJoin(broadcast(single-row temporal midpoint)) — the q_psi_drift pattern",
       "q_chisq" -> "row-marginal x col-marginal grid (~15 rows, alphabet-bounded) + single-row totals — the q_embed_drift pattern",
       "q_cond_entropy" -> "crossJoin(broadcast(single-row transition total + single-row entropies)) over the type-alphabet cell frame — the q_kruskal pattern",
-      "q_hits" -> "crossJoin(broadcast(single-row per-round max)) — the renormalization anchor, the tfidf/lm_score pattern",
       "q_stump" -> "crossJoin(broadcast(single-row totals + single-row fitted model)) — the q_nb_score model-broadcast pattern",
       "q_ljung_box" -> "crossJoin(broadcast(7-row lag grid)) over the POST-AGGREGATE daily deviation frame — the q_acf pattern",
       "q_ipf" -> "crossJoin(broadcast(single-row totals + single-row deviation summary)) over the 15-cell frame — the q_kruskal pattern",
@@ -3362,7 +3361,7 @@ class OperatorSpec extends SparkSpec {
       "q_simpson" -> "crossJoin(broadcast(single-row overall sign + single-row tallies)) over the year-bounded strata frame — the q_kruskal pattern",
       "q_dq_rules" -> "crossJoin(broadcast(single-row orphan counts)) per FK edge — the tfidf/lm_score pattern",
       "q_knee" -> "crossJoin(broadcast(single-row curve endpoints)) over the source-bounded frame — the q_kruskal pattern",
-      "q_pca" -> "crossJoin(broadcast(single-row n / per-round max / summary)) on dims-bounded frames — the q_hits renormalization pattern",
+      "q_pca" -> "crossJoin(broadcast(single-row n / per-round max / summary)) on dims-bounded frames — the tfidf/lm_score pattern",
       "q_shapley" -> "16-cell lattice x 32-row literal grid lookups — alphabet-bounded, the q_embed_drift pattern",
       "q_hill" -> "crossJoin(broadcast(single-row order-statistic threshold)) — the q_psi_drift pattern",
       "q_fk_fanout" -> "count(*) OVER () on the parent-bounded count frame — window, not a join; listed for the single-partition window note")

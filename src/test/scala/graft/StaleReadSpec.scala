@@ -73,4 +73,30 @@ class StaleReadSpec extends SparkSpec {
         s"$name left a plan-keyed cache entry in the session")
     }
   }
+
+  test("a GraftTable time-travel read answers for its pinned version after the table gains another") {
+    val dir = Files.createTempDirectory("graft-stale-table").resolve("docs").toString
+    val docs = Tables.load(spark, sf, "documents")
+      .select(col("doc_id").as("event_id"), col("text").as("line"))
+    def append(df: DataFrame): Unit =
+      df.write.format("graft-table").mode("append").option("path", dir).save()
+    def read(version: Option[Long]): DataFrame = {
+      val r = spark.read.format("graft-table")
+      version.foreach(v => r.option("version", v.toString))
+      r.load(dir).select(col("event_id").as("doc_id"), col("line").as("text"))
+    }
+    append(docs)
+    val pinned = rows(Dedup.minhashLsh(read(Some(1L))))
+    // version 2 adds an exact copy of every third document under a new
+    // id, so the latest version has pairs version 1 lacks
+    append(docs.where(col("event_id") % 3 === 0)
+      .select((col("event_id") + 1000000L).as("event_id"), col("line")))
+    val rerun = rows(Dedup.minhashLsh(read(Some(1L))))
+    val latest = rows(Dedup.minhashLsh(read(None)))
+    assert(latest != pinned, "the two versions give the same answer, so the case proves nothing")
+    assert(rerun == pinned,
+      s"a read pinned to version 1 returned ${rerun.size} rows after version 2, version 1 gives ${pinned.size}")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the time-travel reads left a plan-keyed cache entry in the session")
+  }
 }
