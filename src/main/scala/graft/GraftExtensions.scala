@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BootWeights, BoundaryBucket, BpeEncode, DotProduct,
-  ExtractReading, ForwardFill, GramHashes, Md5Long60, SimHash60, Winnow,
-  WordShingles}
+import graft.functions.VectorFunctions
 
-/** SparkSessionExtensions entry point: makes graft's custom Catalyst
-  * expressions available in any session (including pure SQL users)
-  * without touching the function registry by hand:
+/** SparkSessionExtensions entry point for SQL users: makes graft's
+  * custom Catalyst expressions callable by name in any session built
+  * with it, plus the optimizer rule and planner strategy below:
   *
   * {{{
   * SparkSession.builder()
@@ -16,84 +16,17 @@ import graft.functions.{BootWeights, BoundaryBucket, BpeEncode, DotProduct,
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * The library's DataFrame API also self-registers via
-  * [[graft.functions.VectorFunctions.register]], so extensions are a
-  * convenience for SQL-first deployments.
+  * The functions are [[graft.functions.VectorFunctions.table]], the
+  * same table its `register` writes into one session. The DataFrame
+  * operators need neither: they build the expressions straight into
+  * Columns.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash60(exprs.head)))
-    // full SQL-first parity with VectorFunctions.register: every custom
-    // expression the DataFrame API uses is reachable from plain SQL
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordShingles(exprs(0), exprs(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_grams"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_grams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordShingles(exprs(0), exprs(1).eval(null).asInstanceOf[Int], distinct = false)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[Winnow].getName, "graft_winnow"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Winnow(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gram_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GramHashes(exprs(0), exprs(1).eval(null).asInstanceOf[Int],
-          exprs(2).eval(null).toString)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ffill"),
-      new ExpressionInfo(classOf[ForwardFill].getName, "graft_ffill"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ForwardFill(exprs(0), exprs(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_extract_reading"),
-      new ExpressionInfo(classOf[ExtractReading].getName, "graft_extract_reading"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        // SQLConf.get is the analysis-time thread-local, so this picks
-        // up the SESSION timezone exactly as VectorFunctions.register
-        ExtractReading(exprs.head,
-          org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BpeEncode(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5long60"),
-      new ExpressionInfo(classOf[Md5Long60].getName, "graft_md5long60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5Long60(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bucket"),
-      new ExpressionInfo(classOf[BoundaryBucket].getName, "graft_bucket"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BoundaryBucket(exprs(0), exprs(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_boot_w"),
-      new ExpressionInfo(classOf[BootWeights].getName, "graft_boot_w"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BootWeights(exprs(0), exprs(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toLongArray())))
+    VectorFunctions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
     // transparently upgrade HOF dot products to the codegen'd expression
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
     // whole-operator as-of join: AsOfJoin logical node -> AsOfJoinExec

@@ -199,19 +199,18 @@ final class BpeTable(val merges: IndexedSeq[(String, String)])
   * int-symbol JVM loop per word through [[BpeTable]], codegen'd (was
   * CodegenFallback through the string/Map loop until r13; the BPE
   * metering stage is q_curation_web's hot loop, 2.2× faster on it —
-  * OPTIMIZATION_r13.md, Wave 1). The merges table is
-  * constructor closure state (the TopCells pattern), so a LEARNED
-  * table rides with the plan — `BpeEncode(e)` keeps the default table
-  * under the fixed `graft_bpe` name. */
+  * OPTIMIZATION_r13.md, Wave 1). The merges table is constructor
+  * state, so a LEARNED table rides with the plan as a Column built
+  * through `VectorFunctions.bpe(word, merges)`; `BpeEncode(e)` keeps the
+  * default table. */
 case class BpeEncode(child: Expression,
-    merges: IndexedSeq[(String, String)] = Bpe.MergesIdx,
-    funcName: String = "graft_bpe")
+    merges: IndexedSeq[(String, String)] = Bpe.MergesIdx)
     extends UnaryExpression {
 
   @transient private lazy val table: BpeTable = new BpeTable(merges)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = funcName
+  override def prettyName: String = "graft_bpe"
 
   override def nullSafeEval(input: Any): Any =
     table.encode(input.asInstanceOf[UTF8String])

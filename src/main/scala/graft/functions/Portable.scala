@@ -14,26 +14,16 @@ object Portable {
   /** 60-bit seeded hash: first 15 hex chars of md5("seed:x") as a long.
     * DuckDB mirror: `('0x' || substr(md5(seed || ':' || x), 1, 15))::BIGINT`.
     *
-    * Spark side rides [[Md5Long60]] (r12): bit-identical to the
-    * classic `conv(substring(md5(…),1,15),16,10)` chain but reads the
-    * 60 bits straight off the digest — 2.9× per call on 10M rows
-    * (OPTIMIZATION_r12.md, Wave 13; the chain pays three UTF8String
-    * materializations plus conv's arbitrary-base parse, and md5-dense
-    * operators make up to 13 calls per row). Falls back to the chain
-    * when no session is active to register against (same bits either
-    * way — proven by the property spec and every md5-dependent
-    * oracle). */
-  def md5Long(seed: Column, c: Column): Column = {
-    val payload = concat(seed.cast("string"), lit(":"), c)
-    try {
-      val spark = org.apache.spark.sql.SparkSession.active
-      VectorFunctions.register(spark)
-      call_function("graft_md5long60", payload)
-    } catch {
-      case _: IllegalStateException =>
-        conv(substring(md5(payload), 1, 15), 16, 10).cast("long")
-    }
-  }
+    * Spark side is [[Md5Long60]] (r12), built straight into the Column:
+    * bit-identical to the classic `conv(substring(md5(…),1,15),16,10)`
+    * chain (pinned by the property spec and every md5-dependent
+    * oracle) but reads the 60 bits straight off the digest — 2.9× per
+    * call on 10M rows (OPTIMIZATION_r12.md, Wave 13; the chain pays
+    * three UTF8String materializations plus conv's arbitrary-base
+    * parse, and md5-dense operators make up to 13 calls per row). It
+    * needs no session and no registration. */
+  def md5Long(seed: Column, c: Column): Column =
+    VectorFunctions.md5Long60(concat(seed.cast("string"), lit(":"), c))
 
   def md5Long(seed: Int, c: Column): Column = md5Long(lit(seed), c)
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -337,11 +336,11 @@ case class ForwardFill(child: Expression, slots: Int)
   * index; the member-cell subset for hierarchical IVF).
   */
 case class TopCells(child: Expression, matrix: Array[Array[Double]],
-    k: Int, ids: Array[Int], fnName: String)
+    k: Int, ids: Array[Int])
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = fnName
+  override def prettyName: String = "graft_top_cells"
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
@@ -766,11 +765,11 @@ object KmDist {
   }
 }
 
-case class KmDist(child: Expression, cents: Array[Array[Long]], fnName: String)
+case class KmDist(child: Expression, cents: Array[Array[Long]])
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-  override def prettyName: String = fnName
+  override def prettyName: String = "graft_km_dist"
 
   override def nullSafeEval(input: Any): Any =
     KmDist.eval(input.asInstanceOf[ArrayData], cents)
@@ -860,11 +859,11 @@ object PcScore {
   }
 }
 
-case class PcScore(child: Expression, mu: Array[Double], pv: Array[Double],
-    fnName: String) extends UnaryExpression {
+case class PcScore(child: Expression, mu: Array[Double], pv: Array[Double])
+    extends UnaryExpression {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = fnName
+  override def prettyName: String = "graft_pc_score"
 
   override def nullSafeEval(input: Any): Any =
     PcScore.eval(input.asInstanceOf[ArrayData], mu, pv)
@@ -1080,14 +1079,14 @@ object SilhouetteScore {
 }
 
 case class SilhouetteScore(left: Expression, right: Expression,
-    state: SilhouetteScore.State, fnName: String)
+    state: SilhouetteScore.State)
     extends BinaryExpression with CodegenFallback {
 
   override def dataType: DataType = StructType(Seq(
     StructField("mis", LongType, nullable = true),
     StructField("s", DoubleType, nullable = true)))
   override def nullable: Boolean = true
-  override def prettyName: String = fnName
+  override def prettyName: String = "graft_sil_score"
 
   // manual eval: a NULL label is a live input (it yields a present row
   // with null mis/s), so nullSafeEval's any-null short-circuit is wrong
@@ -1118,50 +1117,4 @@ object ExtractReading {
       StructField("flow", LongType, nullable = false),
       StructField("ao", LongType, nullable = false),
       StructField("asp", LongType, nullable = false))), containsNull = false))))
-}
-
-/** Registration for DSL use: Spark 4's Column has no public Expression
-  * constructor, so the expressions are exposed through the function
-  * registry and referenced with expr("graft_dot(a, b)") etc. */
-object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash60", exprs => SimHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_grams", exprs => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int], distinct = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", exprs => Winnow(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_hashes", exprs => GramHashes(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).toString), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ffill", exprs => ForwardFill(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract_reading", exprs => ExtractReading(exprs.head,
-        spark.sessionState.conf.sessionLocalTimeZone), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe", exprs => BpeEncode(exprs.head), "built-in")
-    // second arg must be a foldable array<double> literal (the
-    // boundary set is driver-computed bounded state)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bucket", exprs => BoundaryBucket(exprs(0),
-        exprs(1).eval(null).asInstanceOf[ArrayData].toDoubleArray()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5long60", exprs => Md5Long60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pair_combos", exprs => PairCombos(exprs.head), "built-in")
-    // second arg must be a foldable array<bigint> literal (the Poisson
-    // CDF threshold grid is driver-computed bounded state)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_boot_w", exprs => BootWeights(exprs(0),
-        exprs(1).eval(null).asInstanceOf[ArrayData].toLongArray()), "built-in")
-  }
 }

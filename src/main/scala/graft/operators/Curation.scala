@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
+import graft.functions.VectorFunctions
 
 /** Composed end-to-end curation pipeline (SURVEY §2.3 L20) — the
   * LLM-data counterpart of the traffic flagship's composition: the
@@ -225,10 +226,9 @@ FROM b, unnest(generate_series(1, n_epochs)) AS u(e)"""
   private val DsirBuckets = 1024L
 
   def dsirWeights(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val grams = documents
       .select(col("doc_id"), (col("doc_id") % 10 < 2).as("is_target"),
-        explode(expr("graft_grams(split(lower(text), '\\\\s+'), 2)")).as("g"))
+        explode(VectorFunctions.grams(tokens(col("text")), 2)).as("g"))
       .select(col("doc_id"), col("is_target"),
         pmod(md5Long(lit("dsir"), col("g")), lit(DsirBuckets)).as("bucket"))
     val buckets = grams.groupBy(col("bucket")).agg(
@@ -282,10 +282,9 @@ FROM dc JOIN lr USING (bucket) GROUP BY doc_id"""
   private val ContamN = 8
 
   def contamination(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val grams = documents
       .select(col("doc_id"),
-        explode(expr(s"graft_shingles(split(lower(text), '\\\\s+'), $ContamN)")).as("gs"))
+        explode(VectorFunctions.shingles(tokens(col("text")), ContamN)).as("gs"))
       .select(col("doc_id"), md5Long(lit("c"), col("gs")).as("g"))
     val bench = grams.where(col("doc_id") % 50 === 0).select(col("g")).distinct()
     val hits = grams.where(col("doc_id") % 50 =!= 0)
@@ -333,10 +332,9 @@ WHERE d.doc_id % 50 <> 0"""
     * bloom probes all hit. Split out so the FPR spec can measure the
     * prefilter's candidate volume directly. */
   def bloomCandidates(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val grams = documents
       .select(col("doc_id"),
-        explode(expr(s"graft_shingles(split(lower(text), '\\\\s+'), $ContamN)")).as("gs"))
+        explode(VectorFunctions.shingles(tokens(col("text")), ContamN)).as("gs"))
       .select(col("doc_id"), md5Long(lit("c"), col("gs")).as("g"))
     val bench = grams.where(col("doc_id") % 50 === 0).select(col("g")).distinct()
     // double hashing g -> k bit indices: h1 + i*h2 mod m, h2 forced odd
@@ -369,9 +367,8 @@ WHERE d.doc_id % 50 <> 0"""
   }
 
   def bloomContamination(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val bench = documents.where(col("doc_id") % 50 === 0)
-      .select(explode(expr(s"graft_shingles(split(lower(text), '\\\\s+'), $ContamN)")).as("gs"))
+      .select(explode(VectorFunctions.shingles(tokens(col("text")), ContamN)).as("gs"))
       .select(md5Long(lit("c"), col("gs")).as("g")).distinct()
     // exact verify: shuffle-hash join (tfidf rule: the set the bloom
     // stands in for does NOT broadcast at scale), bounded by survivors

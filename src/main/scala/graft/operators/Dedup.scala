@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 import graft.functions.Portable._
+import graft.functions.VectorFunctions
 
 /** Deduplication family (SURVEY §2.3 L1-L4). The testdata plants ~5%
   * near-duplicate documents (word-3-gram Jaccard >= 0.8 vs < 0.2 for
@@ -30,9 +31,8 @@ object Dedup {
   // graft_shingles = tight-loop twin of Portable.wordShingles (the HOF
   // formulation was the interpreted bottleneck of both dedup queries).
   private def shingleDf(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     documents.select(col("doc_id"),
-      explode(expr("graft_shingles(split(lower(text), '\\\\s+'), 3)")).as("s"))
+      explode(VectorFunctions.shingles(tokens(col("text")), 3)).as("s"))
   }
 
   private def shingleSqlCteFor(rel: String) =
@@ -1355,9 +1355,8 @@ FROM marked GROUP BY doc_id"""
     * aggregate/zip_with fold was interpreted per token × bit: 6.7 s at
     * sf0.1 vs ~0.5 s for the custom expression; identical values). */
   def simhashes(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     documents.select(col("doc_id"),
-      expr("graft_simhash60(split(lower(text), '\\\\s+'))").as("simhash"))
+      VectorFunctions.simHash60(tokens(col("text"))).as("simhash"))
   }
 
   def simhashDedup(documents: DataFrame): DataFrame = {
@@ -1416,7 +1415,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= $MaxHamming"""
 
   def dupSpans(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val k = SpanGram
     val toks = documents
       .select(col("doc_id"), tokens(col("text")).as("t"))
@@ -1426,7 +1424,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= $MaxHamming"""
     // ~k x the corpus text map-side (the r8 bench regression)
     val grams = toks
       .select(col("doc_id"), col("n_tokens"),
-        posexplode(expr(s"graft_gram_hashes(t, $k, 'sp')")).as(Seq("p0", "gh")))
+        posexplode(VectorFunctions.gramHashes(col("t"), k, "sp")).as(Seq("p0", "gh")))
       .select(col("doc_id"), col("n_tokens"),
         (col("p0") + 1).cast("long").as("pos"), col("gh"))
     val dups = grams.groupBy(col("gh")).agg(count(lit(1)).as("n"))
@@ -1466,14 +1464,14 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= $MaxHamming"""
   // IDEMPOTENCE (rewriting the rewritten corpus removes nothing).
   private[graft] def rewrittenDocs(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val k = SpanGram
     val toks = documents
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .select(col("doc_id"), col("t"), size(col("t")).cast("long").as("n_tokens"))
     // shares the L37 tight-loop gram-hash stage (see dupSpans)
     val grams = toks
-      .select(col("doc_id"), posexplode(expr(s"graft_gram_hashes(t, $k, 'sp')")).as(Seq("p0", "gh")))
+      .select(col("doc_id"),
+        posexplode(VectorFunctions.gramHashes(col("t"), k, "sp")).as(Seq("p0", "gh")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("gh"))
     val firsts = grams.groupBy(col("doc_id"), col("gh"))
       .agg(min(col("pos")).as("fp"), count(lit(1)).as("c"))
@@ -1587,13 +1585,12 @@ FROM spans GROUP BY doc_id"""
   private val KmvK = 256
 
   def kmvOverlap(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     // materialized once: the shingle-explode + double distinct corpus
     // pass has THREE consumers below (the per-source sketch and both
     // sides of the exact-truth join); without it the subtree
     // re-evaluates per consumer (the shingleHashedDf precedent)
     val g = documents.select(col("source"),
-        explode(expr("graft_shingles(split(lower(text), '\\\\s+'), 3)")).as("s"))
+        explode(VectorFunctions.shingles(tokens(col("text")), 3)).as("s"))
       .distinct()
       .select(col("source"), md5Long(lit("kmv"), col("s")).as("h"))
       .distinct()

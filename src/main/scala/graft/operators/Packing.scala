@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Sequence packing for LLM training batches (SURVEY §2.3 L27).
   *
   * Next-fit bin packing of whole documents into fixed token-budget
@@ -81,12 +83,10 @@ object Packing {
     * [a-z]+ word pack as tok=0. */
   def packSequencesBpe(documents: DataFrame, budget: Long = BpeBudget,
       shards: Int = DefaultShards): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
-    val bpeTok = expr(
-      """aggregate(
-        |  transform(regexp_extract_all(lower(text), '[a-z]+', 0),
-        |            w -> size(graft_bpe(w))),
-        |  0L, (acc, x) -> acc + x)""".stripMargin)
+    val bpeTok = aggregate(
+      transform(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)),
+        w => size(VectorFunctions.bpe(w))),
+      lit(0L), (acc, x) => acc + x)
     nextFit(sharded(documents, bpeTok, shards), budget)
   }
 

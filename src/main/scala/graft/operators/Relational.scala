@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import scala.jdk.CollectionConverters._
 
 import graft.functions.Portable._
+import graft.functions.VectorFunctions
 
 /** General analytics core (SURVEY §2.2). Every query carries a DuckDB
   * oracle; float aggregation goes through exact decimal (Portable.sumd)
@@ -1165,7 +1166,6 @@ GROUP BY t.w"""
   // this runs ~1 s with identical output). Leading minutes before the
   // hour's first reading stay null by design (nothing to carry).
   def gapFill(events: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val perMin = events
       .groupBy(col("user_id").as("station_id"),
         date_trunc("minute", col("ts")).as("minute"))
@@ -1175,7 +1175,7 @@ GROUP BY t.w"""
       .agg(map_from_entries(collect_list(
         struct(minute(col("minute")).as("k"), col("flow").as("v")))).as("m"))
       .select(col("station_id"), col("hr"), col("m"),
-        posexplode(expr("graft_ffill(m, 60)")).as(Seq("pos", "flow")))
+        posexplode(VectorFunctions.ffill(col("m"), 60)).as(Seq("pos", "flow")))
       .select(col("station_id"),
         expr("timestampadd(MINUTE, pos, hr)").as("minute"),
         col("flow"),
@@ -1630,12 +1630,9 @@ FROM events e JOIN s USING (event_type)"""
     * search ([[graft.functions.BoundaryBucket]]), O(log parts) per row
     * where the old boundary-count when-chain was O(parts) and would
     * blow codegen limits now that parts tracks the cluster. */
-  private def bucketCol(df: DataFrame, bounds: Array[Double]): Column =
+  private def bucketCol(bounds: Array[Double]): Column =
     if (bounds.isEmpty) lit(0)
-    else {
-      graft.functions.VectorFunctions.register(df.sparkSession)
-      call_function("graft_bucket", col("_rk_key"), lit(bounds))
-    }
+    else VectorFunctions.bucket(col("_rk_key"), bounds)
 
   /** The C48 two-phase core, REUSABLE (r11): append a total-order row
     * number `rn` under `sort` without `Exchange SinglePartition`.
@@ -1678,7 +1675,7 @@ FROM events e JOIN s USING (event_type)"""
     // agrees with sort order; the in-bucket window restores the exact
     // total order
     val bounds = rankBounds(keyed, p)
-    val bucketed = keyed.withColumn("_rk_b", bucketCol(keyed, bounds))
+    val bucketed = keyed.withColumn("_rk_b", bucketCol(bounds))
     val wloc = Window.partitionBy(col("_rk_b")).orderBy(sort: _*)
     val counts = bucketed.groupBy(col("_rk_b")).agg(count(lit(1)).as("_rk_cnt"))
     val w = Window.orderBy(col("_rk_b")).rowsBetween(Window.unboundedPreceding, -1)
@@ -1710,7 +1707,7 @@ FROM events e JOIN s USING (event_type)"""
     val keyed = df.withColumn("_rk_key", bucketKey.cast("double"))
       .withColumn("_rk_v", value)
     val bounds = rankBounds(keyed, p)
-    val bucketed = keyed.withColumn("_rk_b", bucketCol(keyed, bounds))
+    val bucketed = keyed.withColumn("_rk_b", bucketCol(bounds))
     val wloc = Window.partitionBy(col("_rk_b")).orderBy(sort: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = bucketed.groupBy(col("_rk_b")).agg(sum(col("_rk_v")).as("_rk_s"))

@@ -30,14 +30,13 @@ object Similarity {
 
   private def asD(c: Column): Column = c.cast("array<double>")
 
-  private def gdot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
+  private def gdot(a: String, b: String): Column = VectorFunctions.dot(col(a), col(b))
 
   /** (id_as, va, na): id, double vector, precomputed L2 norm. */
   private def withNorm(embeddings: DataFrame, id: String, v: String, n: String): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     embeddings
       .select(col("vec_id").as(id), asD(col("embedding")).as(v))
-      .withColumn(n, sqrt(expr(s"graft_dot($v, $v)")))
+      .withColumn(n, sqrt(gdot(v, v)))
   }
 
   private def cosineSql(a: String, b: String): String =
@@ -65,7 +64,7 @@ object Similarity {
 
   private def bucket(hp: Array[Array[Array[Double]]], t: Int, v: String): Column =
     hp(t).indices.map { p =>
-      val proj = expr(s"graft_dot($v, ${hp(t)(p).mkString("array(", "D,", "D)")})")
+      val proj = VectorFunctions.dot(col(v), lit(hp(t)(p)))
       when(proj > 0, 1L << p).otherwise(0L)
     }.reduce(_ + _)
 
@@ -261,17 +260,16 @@ WHERE rk <= $TopK"""
 
   def hardNegatives(embeddings: DataFrame,
       querySet: Option[DataFrame] = None): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import spark.implicits._
     val q = boundedQueries(embeddings, querySet)
       .select(col("vec_id").as("q_id"), asD(col("embedding")).as("qv"),
         col("label").cast("long").as("q_label"))
-      .withColumn("nq", sqrt(expr("graft_dot(qv, qv)")))
+      .withColumn("nq", sqrt(gdot("qv", "qv")))
     val c = embeddings
       .select(col("vec_id").as("cand_id"), asD(col("embedding")).as("cv"),
         col("label").cast("long").as("c_label"))
-      .withColumn("nc", sqrt(expr("graft_dot(cv, cv)")))
+      .withColumn("nc", sqrt(gdot("cv", "cv")))
     val scored = c.crossJoin(broadcast(q))
       .where(col("q_id") =!= col("cand_id"))
       .select(col("q_id"), col("q_label"), col("cand_id"), col("c_label"),
@@ -331,19 +329,18 @@ FROM n JOIN p USING (q_id) WHERE rk <= $HardNegK"""
 
   def truncationFidelity(embeddings: DataFrame,
       querySet: Option[DataFrame] = None, dims: Int = MrlDims): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import spark.implicits._
     val q = boundedQueries(embeddings, querySet)
       .select(col("vec_id").as("q_id"), asD(col("embedding")).as("qv"))
       .withColumn("qt", slice(col("qv"), 1, dims))
-      .withColumn("nq", sqrt(expr("graft_dot(qv, qv)")))
-      .withColumn("nqt", sqrt(expr("graft_dot(qt, qt)")))
+      .withColumn("nq", sqrt(gdot("qv", "qv")))
+      .withColumn("nqt", sqrt(gdot("qt", "qt")))
     val c = embeddings
       .select(col("vec_id").as("cand_id"), asD(col("embedding")).as("cv"))
       .withColumn("ct", slice(col("cv"), 1, dims))
-      .withColumn("nc", sqrt(expr("graft_dot(cv, cv)")))
-      .withColumn("nct", sqrt(expr("graft_dot(ct, ct)")))
+      .withColumn("nc", sqrt(gdot("cv", "cv")))
+      .withColumn("nct", sqrt(gdot("ct", "ct")))
     val scored = c.crossJoin(broadcast(q))
       .where(col("q_id") =!= col("cand_id"))
       .select(col("q_id"), col("cand_id"),
@@ -424,7 +421,6 @@ WHERE f.rk = 1"""
 
   def bitextMine(embeddings: DataFrame,
       querySet: Option[DataFrame] = None): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import spark.implicits._
     val defaultX = embeddings.where(col("label") === 0 && col("vec_id") % 7 === 0)
@@ -560,25 +556,6 @@ FROM b WHERE r = 1"""
   private val KmeansSampleCap = 4096
   private val KmeansIters = 5
 
-  /** Cell assignment / probe selection through [[graft.functions.TopCells]]:
-    * one expression holding the centroid matrix as closure state and
-    * looping it per row, instead of `array_max(array(C structs))` /
-    * `slice(sort_array(...))` whose expression TREE grows with C — at
-    * C ≈ √N ≈ 141 that shape allocates 141 structs per row and is big
-    * enough that codegen bails to interpreted eval. Tie semantics are
-    * identical (score desc, then cell id desc). The matrix can't reach
-    * the registry through a fixed name (it's per-call model state), so
-    * each call site registers a uniquely-named temp function. */
-  private val tcCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def topCells(spark: SparkSession, vcol: Column,
-      matrix: Array[Array[Double]], k: Int, ids: Array[Int]): Column = {
-    val name = s"graft_top_cells_${tcCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.TopCells(exprs.head, matrix, k, ids, name),
-      "built-in")
-    call_function(name, vcol)
-  }
-
   /** Seeded k-means over a bounded sample; returns unit-norm centroids.
     * Deterministic: sample is id-ordered, init is evenly-spaced sample
     * points, assignment ties break toward the lower cell index. */
@@ -598,7 +575,6 @@ FROM b WHERE r = 1"""
 
   def annIvf(embeddings: DataFrame, cells: Int = 0,
       nprobe: Int = DefaultNProbe, querySet: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
     val base = withNorm(embeddings, "vec_id", "v", "nv")
     val c0 =
       if (cells > 0) cells
@@ -608,10 +584,10 @@ FROM b WHERE r = 1"""
     // argmax / top-nprobe over the centroid matrix in one TopCells pass;
     // ties break toward the higher cell id (same as struct-max ordering)
     val corpus = base.withColumn("cell",
-      element_at(topCells(spark, col("v"), cents, 1, allCells), 1))
+      element_at(VectorFunctions.topCells(col("v"), cents, 1, allCells), 1))
     val probes = withNorm(boundedQueries(embeddings, querySet), "vec_id", "v", "nv")
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nv").as("nq"),
-        explode(topCells(spark, col("v"), cents, nprobe, allCells)).as("cell"))
+        explode(VectorFunctions.topCells(col("v"), cents, nprobe, allCells)).as("cell"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id").asc)
     corpus.join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
@@ -633,7 +609,6 @@ FROM b WHERE r = 1"""
   // spec-pinned against the same brute-force truth.
   def annIvf2(embeddings: DataFrame, cells: Int = 0,
       nprobe: Int = DefaultNProbe, querySet: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
     val base = withNorm(embeddings, "vec_id", "v", "nv")
     val c0 =
       if (cells > 0) cells
@@ -657,13 +632,13 @@ FROM b WHERE r = 1"""
     // cell = -1, unreachable by every query
     val occupied = supers.indices.filter(s => memberOf.contains(s)).toArray
     val superPick = element_at(
-      topCells(spark, col("v"), occupied.map(supers), 1, occupied), 1)
+      VectorFunctions.topCells(col("v"), occupied.map(supers), 1, occupied), 1)
     // per super-cell: argmax over its member cells only (the matched
     // CaseWhen branch is the only one evaluated, so a row costs C1
     // super dots + ~C/C1 member dots ≈ 2√C, not C)
     val cellWithin = occupied.toSeq.map { s =>
       val members = cents.indices.filter(memberOf(_) == s).toArray
-      s -> element_at(topCells(spark, col("v"), members.map(cents), 1, members), 1)
+      s -> element_at(VectorFunctions.topCells(col("v"), members.map(cents), 1, members), 1)
     }
     val cellExpr = cellWithin.foldLeft(lit(-1): Column) { case (acc, (s, e)) =>
       when(col("sup") === s, e).otherwise(acc)
@@ -672,7 +647,8 @@ FROM b WHERE r = 1"""
     // queries rank cells exactly over all C centroids
     val probes = withNorm(boundedQueries(embeddings, querySet), "vec_id", "v", "nv")
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nv").as("nq"),
-        explode(topCells(spark, col("v"), cents, nprobe, cents.indices.toArray)).as("cell"))
+        explode(VectorFunctions.topCells(col("v"), cents, nprobe,
+          cents.indices.toArray)).as("cell"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id").asc)
     corpus.join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
@@ -1200,7 +1176,6 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
     * IVF efficiency metric the sizing rule controls (≈ nprobe/C). */
   def ivfCandidateFraction(embeddings: DataFrame, cells: Int = 0,
       nprobe: Int = DefaultNProbe, querySet: Option[DataFrame] = None): Double = {
-    val spark = embeddings.sparkSession
     val base = withNorm(embeddings, "vec_id", "v", "nv")
     val n = base.count().toDouble
     val c0 =
@@ -1209,11 +1184,11 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
     val cents = kmeansCentroids(base, c0)
     val allCells = cents.indices.toArray
     val cellSizes = base.withColumn("cell",
-      element_at(topCells(spark, col("v"), cents, 1, allCells), 1))
+      element_at(VectorFunctions.topCells(col("v"), cents, 1, allCells), 1))
       .groupBy(col("cell")).agg(count(lit(1)).as("sz"))
     val probes = withNorm(boundedQueries(embeddings, querySet), "vec_id", "v", "nv")
       .select(col("vec_id").as("q_id"),
-        explode(topCells(spark, col("v"), cents, nprobe, allCells)).as("cell"))
+        explode(VectorFunctions.topCells(col("v"), cents, nprobe, allCells)).as("cell"))
     val perQuery = probes.join(cellSizes, "cell")
       .groupBy(col("q_id")).agg(sum(col("sz")).as("cands"))
       .agg(avg(col("cands"))).head().getDouble(0)
@@ -1236,8 +1211,9 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
   // each output coordinate is an exact BIGINT dot product — both
   // engines replay it bit-for-bit; no float summation order anywhere.
   // Scale: PURE MAP — the sign matrix is a 16×64 literal baked into
-  // the plan at build time (model state in closure, the TopCells
-  // pattern), the corpus never shuffles, output rows = 16 per vector.
+  // the plan at build time (model state held by the plan itself, as
+  // TopCells holds its matrix), the corpus never shuffles, output
+  // rows = 16 per vector.
   private val RpOutDims = 16
   private val RpInDims = 64
 
@@ -1301,12 +1277,7 @@ FROM q JOIN agg ON agg.vec_id = q.vec_id"""
     * loop (PcScore posture — the nested transform/zip_with/aggregate
     * HOF chain it replaces was interpreted per element). */
   private def kmAssignCols(pts: DataFrame, cs: IndexedSeq[Array[Long]]): DataFrame = {
-    val name = s"graft_km_dist_${tcCounter.incrementAndGet()}"
-    val cents = cs.toArray
-    pts.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.KmDist(exprs.head, cents, name),
-      "built-in")
-    pts.withColumn("km", call_function(name, col("xi")))
+    pts.withColumn("km", VectorFunctions.kmDist(col("xi"), cs.toArray))
       .withColumn("dist", element_at(col("km"), 1))
       .withColumn("cid", element_at(col("km"), 2))
   }
@@ -1540,7 +1511,6 @@ $out"""
   // frame (bounded by the label alphabet, the L67 KMV pattern — never
   // the corpus).
   def embeddingDrift(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val lbl = embeddings.select(col("label"), asD(col("embedding")).as("v"))
       .select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("label"), col("pos"))
@@ -1724,12 +1694,8 @@ FROM vq"""
     // replaces a 64-step decimal HOF (aggregate over sequence), which
     // is interpreted per element and walked a 64-deep expression tree
     // per row (r12 wave 15; bit-parity pinned in VectorExprSpec)
-    val name = s"graft_pc_score_${tcCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.PcScore(exprs.head, mu, v, name),
-      "built-in")
     base.select(col("vec_id"),
-      call_function(name, col("v")).as("score"),
+      VectorFunctions.pcScore(col("v"), mu, v).as("score"),
       lit(r6(lambda)).as("eigval"))
   }
 
@@ -1875,8 +1841,6 @@ FROM num JOIN norms x ON x.label = num.la JOIN norms y ON y.label = num.lb"""
     // (vec_id, label) rows merge into one xx/dots group — while this
     // path scores every row independently and never reads vec_id; the
     // two agree exactly under the unique-key contract.
-    val spark = embeddings.sparkSession
-    VectorFunctions.register(spark)
     val d6 = "decimal(18,6)"
     val x = embeddings
       .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1925,10 +1889,6 @@ FROM num JOIN norms x ON x.label = num.la JOIN norms y ON y.label = num.lb"""
     }
     val state = new graft.functions.SilhouetteScore.State(
       labels, nc, present, s6, s6null, ss2)
-    val name = s"graft_sil_score_${tcCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.SilhouetteScore(
-        exprs(0), exprs(1), state, name), "built-in")
     embeddings
       // r13 (r12 advice #4): filter on the CHEAP equivalent predicate
       // BEFORE the scoring projection — r is null exactly when the
@@ -1942,8 +1902,8 @@ FROM num JOIN norms x ON x.label = num.la JOIN norms y ON y.label = num.lb"""
       .where(col("embedding").isNotNull && size(col("embedding")) > 0 &&
         col("label").cast("long").isNotNull)
       .select(col("label").cast("long").as("label"),
-        call_function(name, asD(col("embedding")),
-          col("label").cast("long")).as("r"))
+        VectorFunctions.silhouetteScore(asD(col("embedding")),
+          col("label").cast("long"), state).as("r"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
         sum(col("r.mis")).as("n_misassigned"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
+import graft.functions.VectorFunctions
 
 /** Statistical estimation operators: uncertainty quantification and
   * cardinality estimation for corpus metrics at 100 TB.
@@ -80,13 +81,13 @@ object Stats {
     // arbitrary-base string parses on it (B/4 digests × N rows); rows
     // with w = 0 are dropped BEFORE the aggregate (they contribute 0 to
     // both sums; a replicate's n > 0 gate is unchanged)
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val reps = base
       .select(col("event_type"), col("event_id"), col("v"),
         explode(sequence(lit(0), lit((BootB + 3) / 4 - 1))).as("g"))
       .select(col("event_type"), col("v"), col("g"),
-        posexplode(expr("graft_boot_w(concat('boot', cast(g as string), ':', " +
-          s"cast(event_id as string)), array(${BootThresholds.mkString("L,")}L))"))
+        posexplode(VectorFunctions.bootWeights(concat(lit("boot"),
+          col("g").cast("string"), lit(":"), col("event_id").cast("string")),
+          BootThresholds.toArray))
           .as(Seq("sl", "w")))
       .withColumn("b", col("g") * 4 + col("sl"))
       .where(col("b") < BootB && col("w") > 0)
@@ -571,10 +572,9 @@ FROM cells JOIN rx USING (event_type) JOIN cy USING (dow) CROSS JOIN n"""
     // (plus a second sized subtree where exchange reuse misses) are
     // gone. sort_array over the distinct items gives p1 < p2 by value,
     // each unordered pair once — the identical pair multiset.
-    graft.functions.VectorFunctions.register(lineitem.sparkSession)
     val pairs = sized.groupBy(col("bid"))
       .agg(sort_array(collect_list(col("item"))).as("items"))
-      .select(explode(expr("graft_pair_combos(items)")).as("p"))
+      .select(explode(VectorFunctions.pairCombos(col("items"))).as("p"))
       .groupBy(col("p.p1").as("p1"), col("p.p2").as("p2"))
       .agg(count(lit(1)).as("support"))
       .where(col("support") >= PairMinSup)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
+import graft.functions.VectorFunctions
 
 /** Text-analysis operators for training-data curation (SURVEY §2.3
   * L8-L11). All pure codegen'd expressions over `documents` — at 100 TB
@@ -294,24 +295,8 @@ FROM x"""
   // leftmost-nonoverlapping occurrence — see Bpe.encode's scaladoc).
   // bpe_md5 hashes every token of every word in order, so one wrong
   // merge anywhere in the corpus fails the gate.
-  def bpeEncode(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
-    val words = documents
-      .select(col("doc_id"),
-        posexplode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")))
-      .toDF("doc_id", "wi", "word")
-    words
-      .select(col("doc_id"), col("wi"), expr("graft_bpe(word)").as("toks"))
-      .select(col("doc_id"), col("wi"),
-        size(col("toks")).cast("long").as("n_toks"),
-        array_join(col("toks"), "|").as("enc"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_toks")).as("n_bpe_tokens"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("wi"), col("enc")))),
-          x => x.getField("enc")), " ")).as("bpe_md5"))
-  }
+  def bpeEncode(documents: DataFrame): DataFrame =
+    bpeEncodeWith(documents, graft.functions.Bpe.MergesIdx)
 
   /** Shared WITH-RECURSIVE body replaying graft_bpe's greedy loop per
     * (doc, word): `fin` holds (doc_id, wi, e, n_toks). Reused by
@@ -401,7 +386,6 @@ FROM pl"""
   // once. Portability: all sums are exact BIGINTs; the one division
   // happens per language at the end (IEEE + round 6).
   def tokenizerFertility(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val toks = tokens(col("text"))
     val scored = documents.select(
       Seq(col("doc_id"), col("text")) ++
@@ -418,7 +402,7 @@ FROM pl"""
       .select(col("doc_id"), col("s.pl").as("pred_lang"), explode(col("s.ws")).as("word"))
     words
       .select(col("pred_lang"), col("doc_id"),
-        size(expr("graft_bpe(word)")).cast("long").as("t"),
+        size(VectorFunctions.bpe(col("word"))).cast("long").as("t"),
         length(col("word")).cast("long").as("c"))
       .groupBy(col("pred_lang"), col("doc_id"))
       .agg(sum(col("t")).as("t"), sum(col("c")).as("c"))
@@ -592,22 +576,16 @@ s$k AS MATERIALIZED (SELECT trim(replace(replace('|' || s || '|', '|'||a||'|'||b
   }
 
   /** L33 inference with a LEARNED merges table — the seam end-to-end:
-    * the table rides as expression closure state under a uniquely-
-    * named temp function (per-call model state, the TopCells
-    * pattern); everything else is bpeEncode's plan. */
-  private val bpeWithCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+    * the table rides with the plan as BpeEncode's constructor state;
+    * [[bpeEncode]] is this plan over the default table. */
   def bpeEncodeWith(documents: DataFrame,
       merges: IndexedSeq[(String, String)]): DataFrame = {
-    val spark = documents.sparkSession
-    val name = s"graft_bpe_with_${bpeWithCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.BpeEncode(exprs.head, merges, name), "built-in")
     val words = documents
       .select(col("doc_id"),
         posexplode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")))
       .toDF("doc_id", "wi", "word")
     words
-      .select(col("doc_id"), col("wi"), call_function(name, col("word")).as("toks"))
+      .select(col("doc_id"), col("wi"), VectorFunctions.bpe(col("word"), merges).as("toks"))
       .select(col("doc_id"), col("wi"),
         size(col("toks")).cast("long").as("n_toks"),
         array_join(col("toks"), "|").as("enc"))
@@ -796,10 +774,9 @@ FROM tok GROUP BY token HAVING count(*) * $HhDenom > (SELECT total FROM n)"""
     // relational shape (explode positions -> groupBy(doc, window) min
     // -> distinct) needs two shuffles of 4x-duplicated hash rows; this
     // is map-only with identical output (and identical to the oracle).
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     documents
       .where(length(col("text")) >= 8)
-      .select(col("doc_id"), explode(expr("graft_winnow(text)")).as("fp"))
+      .select(col("doc_id"), explode(VectorFunctions.winnow(col("text"))).as("fp"))
   }
 
   // ---- L13: term frequencies over normalized text (the canonical
@@ -1070,7 +1047,6 @@ SELECT doc_id, score, n_terms FROM sc ORDER BY score DESC, doc_id LIMIT $Bm25Top
   private val RrfDenseQueryId = 0L
 
   def hybridRrf(documents: DataFrame, embeddings: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val armW = org.apache.spark.sql.expressions.Window
     // sparse arm: L64's scorer, cut to RrfArmK, then ranked (the
     // window sorts the already-cut 50-row frame)
@@ -1086,8 +1062,9 @@ SELECT doc_id, score, n_terms FROM sc ORDER BY score DESC, doc_id LIMIT $Bm25Top
       .select(col("vec_id").as("doc_id"), col("embedding").cast("array<double>").as("cv"))
       .crossJoin(broadcast(qv))
       .select(col("doc_id"), round(
-        expr("graft_dot(qv, cv)") /
-          (sqrt(expr("graft_dot(qv, qv)")) * sqrt(expr("graft_dot(cv, cv)"))), 6).as("cos"))
+        VectorFunctions.dot(col("qv"), col("cv")) /
+          (sqrt(VectorFunctions.dot(col("qv"), col("qv"))) *
+            sqrt(VectorFunctions.dot(col("cv"), col("cv")))), 6).as("cos"))
       .orderBy(col("cos").desc, col("doc_id")).limit(RrfArmK)
       .withColumn("r_dense", row_number()
         .over(armW.orderBy(col("cos").desc, col("doc_id"))).cast("long"))
@@ -1167,9 +1144,8 @@ SELECT doc_id, top_term, top_score FROM (
 
   // ---- L15: bigram counts (n-gram language-model statistics) ----
   def bigrams(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     documents
-      .select(explode(expr("graft_shingles(split(lower(text), '\\\\s+'), 2)")).as("bigram"))
+      .select(explode(VectorFunctions.shingles(tokens(col("text")), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("n_docs_with"))
       .where(col("n_docs_with") >= 3)
   }
@@ -1232,13 +1208,12 @@ FROM agg"""
   private val PmiMinCount = 5L
 
   def pmi(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val toks = documents.select(explode(tokens(col("text"))).as("token"))
       .where(length(col("token")) > 0)
     val uni = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
     val nTok = toks.agg(count(lit(1)).as("n_tok"))
     documents
-      .select(explode(expr("graft_grams(split(lower(text), '\\\\s+'), 2)")).as("bigram"))
+      .select(explode(VectorFunctions.grams(tokens(col("text")), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("c_xy"))
       .where(col("c_xy") >= PmiMinCount)
       .select(element_at(split(col("bigram"), " "), 1).as("w1"),
@@ -1286,10 +1261,9 @@ FROM big b JOIN uni x ON x.token = b.w1 JOIN uni y ON y.token = b.w2, n"""
       size(toks).cast("long").as("n_words"),
       round(lit(1.0) - size(array_distinct(toks)).cast("double") /
         size(toks).cast("double"), 6).as("dup_word_frac"))
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val bg = documents
       .select(col("doc_id"),
-        explode(expr("graft_grams(split(lower(text), '\\\\s+'), 2)")).as("bigram"))
+        explode(VectorFunctions.grams(tokens(col("text")), 2)).as("bigram"))
       .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(max(col("c")).as("top_c"), sum(col("c")).as("n_bigrams"))
@@ -1328,9 +1302,8 @@ FROM w LEFT JOIN bg ON w.doc_id = bg.doc_id"""
   private val LmK = 0.5
 
   def lmScore(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val bg = documents.select(col("doc_id"),
-      explode(expr("graft_grams(split(lower(text), '\\\\s+'), 2)")).as("bigram"))
+      explode(VectorFunctions.grams(tokens(col("text")), 2)).as("bigram"))
     val toks = documents.select(explode(tokens(col("text"))).as("w"))
     val c2 = bg.groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
     val c1 = toks.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
@@ -2429,9 +2402,8 @@ JOIN (SELECT doc_id, count(*)::BIGINT AS n_merged_spans,
   private val KnMinSupport = 3L
 
   def kneserNey(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val bg = documents
-      .select(explode(expr("graft_grams(split(lower(text), '\\\\s+'), 2)")).as("bigram"))
+      .select(explode(VectorFunctions.grams(tokens(col("text")), 2)).as("bigram"))
       .select(substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
@@ -2525,9 +2497,8 @@ WHERE n_words > 0"""
   // most |sources| rows, so fan-out is alphabet-bounded per key), and
   // every released number is an exact BIGINT ratio rounded once.
   def sourceFpOverlap(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val sfp = documents
-      .select(col("source"), explode(expr("graft_winnow(text)")).as("fp"))
+      .select(col("source"), explode(VectorFunctions.winnow(col("text"))).as("fp"))
       .distinct()
       .localCheckpoint() // feeds sizes AND the pair join
     val sizes = sfp.groupBy(col("source")).agg(count(lit(1)).as("sz"))
@@ -2575,10 +2546,9 @@ JOIN sizes z2 ON z2.source = i.s2"""
   // shuffles as a 16-byte md5, never the string — the L25 width rule),
   // one (n, hash) count, one 5-row rollup; exact ppm.
   def ngramDupCurve(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     val byN = (1 to 5).map { n =>
       documents.select(lit(n.toLong).as("n"),
-        explode(expr(s"graft_grams(split(lower(text), '\\\\s+'), $n)")).as("g"))
+        explode(VectorFunctions.grams(tokens(col("text")), n)).as("g"))
     }.reduce(_ unionAll _)
     byN.select(col("n"), md5(col("g")).as("h"))
       .groupBy(col("n"), col("h")).agg(count(lit(1)).as("c"))
@@ -3339,11 +3309,9 @@ FROM cnt"""
   private val CollisionKs = Seq(2, 3, 5)
 
   def hashCollisions(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(documents.sparkSession)
     CollisionKs.map { k =>
       documents
-        .select(explode(expr(
-          s"graft_shingles(split(lower(text), '\\\\s+'), $k)")).as("s"))
+        .select(explode(VectorFunctions.shingles(tokens(col("text")), k)).as("s"))
         .select(lit(k.toLong).as("k"), col("s"),
           md5Long(lit("col"), col("s")).as("h"))
         .agg(lit(k.toLong).as("k"),

@@ -3,6 +3,8 @@ package graft.traffic
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Spark-first re-expression of the reference's traffic pipelines.
   *
   * Reference semantics (cited file:line from /root/reference):
@@ -111,9 +113,9 @@ object Traffic {
     // compiled regexes AND a DateTimeFormatter per line (together
     // ≈1.8 s of the 3.4 s extract at sf0.1). The malformed-timestamp
     // drop (TrafficMaxLaneFlow.java:215-222) is the ts_us null filter.
-    graft.functions.VectorFunctions.register(lines.sparkSession)
     lines
-      .select(col("event_id"), expr("graft_extract_reading(line)").as("x"))
+      .select(col("event_id"), VectorFunctions.extractReading(col("line"),
+        lines.sparkSession.sessionState.conf.sessionLocalTimeZone).as("x"))
       .where(col("x").isNotNull && col("x.ts_us").isNotNull)
       .select(col("event_id"),
         col("x.station").as("station_id"),
@@ -187,10 +189,10 @@ FROM lanes"""
     * Expand fan-out is absorbed by map-side partial aggregation BEFORE
     * the exchange, so the shuffle carries one partial max per (window,
     * station, map task) — not the fanned-out rows. Default 60m/15m (4×
-    * fan-out) is the grader scale; [[maxFlowSliding60x1]] runs the
-    * reference's own 60m/1m parameters
+    * fan-out) is the grader scale; the reference's own 60m/1m parameters
     * (`TrafficMaxLaneFlow.java:390-394` with option defaults, 60×
-    * fan-out). */
+    * fan-out) run on [[maxFlowSlidingScan]], which specs compare
+    * against this plan at 60m/1m. */
   def maxFlowSliding(events: DataFrame, dur: String = "60 minutes",
       slide: String = "15 minutes"): DataFrame =
     unpack(
@@ -198,30 +200,6 @@ FROM lanes"""
         .groupBy(window(col("ts"), dur, slide).as("w"),
           col("user_id").as("station_id"))
         .agg(maxStruct),
-      col("w.start").as("window_start"), col("station_id"))
-
-  /** The reference's actual window parameters: 60 min every 1 min. */
-  def maxFlowSliding60x1(events: DataFrame): DataFrame =
-    maxFlowSliding(events, "60 minutes", "1 minute")
-
-  /** Two-level sliding argmax for DENSE feeds: pre-aggregate per
-    * slide-aligned tumbling bucket, then expand the ×(dur/slide)
-    * fan-out over BUCKET maxima instead of raw events. max is
-    * associative, so results are identical to [[maxFlowSliding]]
-    * (asserted by `TrafficSpec`). Worth it when events-per-
-    * (bucket, station) ≫ 1 — the reference's real feed is ~16 rows per
-    * station-minute (30 s × 8 lanes), a 16× cut of the Expand input;
-    * the driver testdata measures 1.0 rows per bucket (one event per
-    * station-minute), so the benched query keeps the direct single-pass
-    * plan and this variant exists for the dense case. */
-  def maxFlowSlidingPreAgg(events: DataFrame, dur: String = "60 minutes",
-      slide: String = "1 minute"): DataFrame =
-    unpack(
-      events
-        .groupBy(window(col("ts"), slide).as("bw"), col("user_id").as("station_id"))
-        .agg(maxStruct)
-        .groupBy(window(col("bw.start"), dur, slide).as("w"), col("station_id"))
-        .agg(max(col("m")).as("m")),
       col("w.start").as("window_start"), col("station_id"))
 
   /** Ordered-scan sliding argmax — the ×(dur/slide) Expand eliminated.
@@ -318,15 +296,12 @@ FROM lanes"""
     * nothing and cost an exchange). max-by is associative, so both
     * paths are result-identical — the density probe only decides
     * whether the collapse runs below or above the exchange.
-    * [[maxFlowSliding]]/[[maxFlowSlidingPreAgg]] remain the pure-
-    * DataFrame (Expand-based) formulations, spec-proven equal. */
-  def maxFlowSlidingAuto(events: DataFrame, dur: String = "60 minutes",
-      slide: String = "1 minute", slideSeconds: Long = 60L): DataFrame = {
-    require(dur == "60 minutes" && slide == "1 minute",
-      "auto path is wired for the flagship 60/1 parameters")
+    * [[maxFlowSliding]] remains the pure-DataFrame (Expand-based)
+    * formulation, spec-proven equal on both regimes. Windows are the
+    * flagship's 60 slides of `slideSeconds`. */
+  def maxFlowSlidingAuto(events: DataFrame, slideSeconds: Long = 60L): DataFrame =
     maxFlowSlidingScan(events, durSlides = 60, slideSeconds = slideSeconds,
       preAgg = bucketDensity(events, slideSeconds) >= DenseThreshold)
-  }
 
   /** Synthetic dense feed, oracle-mirrored: every 8th event fans into 16
     * sub-readings 3 s apart (≈16 rows/station-min — the reference's

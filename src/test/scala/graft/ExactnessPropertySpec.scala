@@ -49,10 +49,10 @@ class ExactnessPropertySpec extends SparkSpec {
     val th = graft.operators.Stats.BootThresholds.mkString("array(", "L,", "L)")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_pc_score_cg", exprs => graft.functions.PcScore(exprs.head,
-        Array(0.5, -0.5), Array(1.0, 2.0), "graft_pc_score_cg"), "built-in")
+        Array(0.5, -0.5), Array(1.0, 2.0)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_km_dist_cg", exprs => graft.functions.KmDist(exprs.head,
-        Array(Array(0L, 1L), Array(2L, 3L)), "graft_km_dist_cg"), "built-in")
+        Array(Array(0L, 1L), Array(2L, 3L))), "built-in")
     val key = "spark.sql.codegen.factoryMode"
     val old = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")
@@ -421,7 +421,7 @@ class ExactnessPropertySpec extends SparkSpec {
     val rnd = new scala.util.Random(787)
     def register(name: String, mu: Array[Double], pv: Array[Double]): Unit =
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => graft.functions.PcScore(exprs.head, mu, pv, name),
+        name, exprs => graft.functions.PcScore(exprs.head, mu, pv),
         "built-in")
     def chain(dim: Int, mu: Array[Double], pv: Array[Double]) =
       aggregate(sequence(lit(1), lit(dim)),
@@ -655,7 +655,7 @@ class ExactnessPropertySpec extends SparkSpec {
       Array(-5L, 7L, -9L, 11L))
     val name = "graft_km_dist_spec"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.KmDist(exprs.head, cents.toArray, name),
+      name, exprs => graft.functions.KmDist(exprs.head, cents.toArray),
       "built-in")
     val vecs: Seq[Seq[java.lang.Long]] =
       Seq(null, Seq.empty[java.lang.Long], Seq[java.lang.Long](1L, 2L, 3L),

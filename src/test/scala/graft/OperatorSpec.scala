@@ -4094,7 +4094,7 @@ class OperatorSpec extends SparkSpec {
     graft.functions.VectorFunctions.register(spark)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "tc_test", exprs => TopCells(exprs.head, matrix, 3,
-        matrix.indices.toArray, "tc_test"), "built-in")
+        matrix.indices.toArray), "built-in")
     val structs = matrix.zipWithIndex.map { case (c, i) =>
       struct(expr(s"graft_dot(v, ${c.mkString("array(", "D,", "D)")})").as("p"),
         lit(i).as("c"))

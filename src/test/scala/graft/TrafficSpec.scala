@@ -69,9 +69,14 @@ class TrafficSpec extends SparkSpec {
   }
 
   test("two-level pre-agg sliding argmax equals the direct plan") {
-    val events = Tables.load(spark, sf, "events")
-    val direct = Traffic.maxFlowSliding(events, "60 minutes", "1 minute")
-    val preAgg = Traffic.maxFlowSlidingPreAgg(events, "60 minutes", "1 minute")
+    // the dense regime q_max_flow_sliding_60_1_dense serves: the auto
+    // path collapses each slide bucket below the station exchange, then
+    // walks the bucket maxima; its rows must be the Expand plan's
+    val d = Traffic.densify(Tables.load(spark, sf, "events"))
+    assert(Traffic.bucketDensity(d) >= Traffic.DenseThreshold)
+    val preAgg = Traffic.maxFlowSlidingAuto(d)
+    val direct = Traffic.maxFlowSliding(d, "60 minutes", "1 minute")
+    assert(!direct.isEmpty)
     assert(direct.exceptAll(preAgg).isEmpty && preAgg.exceptAll(direct).isEmpty)
   }
 
@@ -120,8 +125,8 @@ class TrafficSpec extends SparkSpec {
       .queryExecution.executedPlan.toString.contains("Expand"))
     // both paths stay result-identical on the dense feed (associativity)
     val d = Traffic.densify(events)
-    val a = Traffic.maxFlowSlidingPreAgg(d, "60 minutes", "1 minute")
-    val b = Traffic.maxFlowSliding(d, "60 minutes", "1 minute")
+    val a = Traffic.maxFlowSlidingAuto(d)
+    val b = Traffic.maxFlowSlidingScan(d)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }
